@@ -187,9 +187,20 @@ object DiffSync {
     * parallel across partitions, batched within (commit interval
     * mirrors the reference's 100-row commits, pl:3693).
     *
-    * Rows must be partitioned by PK before calling (each PK in exactly
-    * one partition) so insert/delete ordering per key is serialized —
-    * the reference got this via its single sorted stream.
+    * The input must hold each PK at most once, so no two partitions
+    * ever write the same key and per-key ordering needs no shuffle of
+    * its own. `diff` guarantees it: source and target PKs are each
+    * unique, so the full-outer join emits every key in exactly one
+    * row, and the writer runs in the join's own result stage (the
+    * object-level "only shuffle is the join's" claim). Callers whose
+    * input can repeat a key — a CDC micro-batch — repartition by PK
+    * first (`EventStream.continuousSyncWriter` does).
+    *
+    * `identical` rows are dropped before the writer. The returned
+    * [[SyncReport]] counts applied rows per flag (`new` → inserted,
+    * `deleted` → deleted, any other flag → updated) through
+    * accumulators updated inside the action, which Spark merges once
+    * per successful task — a retried partition is not double-counted.
     */
   /** `dialect`: "postgresql" batches `INSERT … ON CONFLICT DO UPDATE`;
     * "generic" runs portable UPDATE-then-INSERT per row (works on any
@@ -199,8 +210,11 @@ object DiffSync {
       password: String, batchSize: Int = 100,
       dialect: String = "postgresql")
 
+  /** Rows `applyToJdbc` applied, per flag. */
+  final case class SyncReport(inserted: Long, updated: Long, deleted: Long)
+
   def applyToJdbc(diffed: DataFrame, pkCols: Seq[String],
-      target: SyncTarget): Unit = {
+      target: SyncTarget): SyncReport = {
     val valueCols = diffed.columns
       .filterNot(c => pkCols.contains(c) || c == FlagCol).toIndexedSeq
     val allCols = pkCols ++ valueCols
@@ -214,9 +228,19 @@ object DiffSync {
         pkCols.map(c => s"$c = ?").mkString(" AND ")
     val deleteSql = s"DELETE FROM ${target.table} WHERE " +
       pkCols.map(c => s"$c = ?").mkString(" AND ")
+    // row positions resolved once per call, not per column per row
     val schema = diffed.schema
+    val flagIdx = schema.fieldIndex(FlagCol)
+    val pkIdx = pkCols.map(schema.fieldIndex).toArray
+    val allIdx = allCols.map(schema.fieldIndex).toArray
+    // UPDATE binds value columns, then the PK in its WHERE clause
+    val updIdx = valueCols.map(schema.fieldIndex).toArray ++ pkIdx
     val generic = target.dialect != "postgresql"
-    diffed.repartition(pkCols.map(col): _*)
+    val sc = diffed.sparkSession.sparkContext
+    val inserted = sc.longAccumulator("sync.inserted")
+    val updated = sc.longAccumulator("sync.updated")
+    val deleted = sc.longAccumulator("sync.deleted")
+    diffed.filter(col(FlagCol) =!= "identical")
       .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
         val conn = java.sql.DriverManager.getConnection(
           target.url, target.user, target.password)
@@ -233,35 +257,34 @@ object DiffSync {
           pendingGen = 0
           conn.commit()
         }
-        def bindAll(row: org.apache.spark.sql.Row): Unit =
-          allCols.zipWithIndex.foreach { case (c, i) =>
-            ins.setObject(i + 1, row.getAs[Any](schema.fieldIndex(c))) }
+        def bind(st: java.sql.PreparedStatement, idx: Array[Int],
+            row: org.apache.spark.sql.Row): Unit = {
+          var i = 0
+          while (i < idx.length) { st.setObject(i + 1, row.get(idx(i))); i += 1 }
+        }
         try {
           rows.foreach { row =>
-            row.getAs[String](FlagCol) match {
-              case "identical" => ()
+            val flag = row.getString(flagIdx)
+            flag match {
               case "deleted" =>
-                pkCols.zipWithIndex.foreach { case (c, i) =>
-                  del.setObject(i + 1, row.getAs[Any](schema.fieldIndex(c))) }
-                del.addBatch(); pendingDel += 1
-              case _ if generic => // portable UPDATE-then-INSERT
-                // statements run row-at-a-time (the portable-dialect
-                // price) but COMMIT at the batch cadence — per-row
-                // commits cost more than the statements themselves on
-                // an embedded/remote target (the reference commits
-                // every 100 rows for the same reason, pl:3693)
-                val updated = upd.map { u =>
-                  valueCols.zipWithIndex.foreach { case (c, i) =>
-                    u.setObject(i + 1, row.getAs[Any](schema.fieldIndex(c))) }
-                  pkCols.zipWithIndex.foreach { case (c, i) =>
-                    u.setObject(valueCols.length + i + 1,
-                      row.getAs[Any](schema.fieldIndex(c))) }
-                  u.executeUpdate()
-                }.getOrElse(0)
-                if (updated == 0) { bindAll(row); ins.executeUpdate() }
-                pendingGen += 1
-              case _ => // new | changed → batched PG upsert
-                bindAll(row); ins.addBatch(); pendingIns += 1
+                bind(del, pkIdx, row); del.addBatch(); pendingDel += 1
+                deleted.add(1)
+              case _ =>
+                if (generic) { // portable UPDATE-then-INSERT
+                  // statements run row-at-a-time (the portable-dialect
+                  // price) but COMMIT at the batch cadence — per-row
+                  // commits cost more than the statements themselves on
+                  // an embedded/remote target (the reference commits
+                  // every 100 rows for the same reason, pl:3693)
+                  val n = upd.map { u =>
+                    bind(u, updIdx, row); u.executeUpdate()
+                  }.getOrElse(0)
+                  if (n == 0) { bind(ins, allIdx, row); ins.executeUpdate() }
+                  pendingGen += 1
+                } else { // new | changed → batched PG upsert
+                  bind(ins, allIdx, row); ins.addBatch(); pendingIns += 1
+                }
+                if (flag == "new") inserted.add(1) else updated.add(1)
             }
             if (pendingIns >= target.batchSize ||
                 pendingDel >= target.batchSize ||
@@ -272,6 +295,7 @@ object DiffSync {
           ins.close(); upd.foreach(_.close()); del.close(); conn.close()
         }
       }
+    SyncReport(inserted.sum, updated.sum, deleted.sum)
   }
 
   /** PostgreSQL upsert statement for the apply step. */

@@ -94,9 +94,10 @@ object Tables {
       conf: graft.convert.Config): Option[String] = {
     val eligible = table.pk.toSeq.flatMap(_.cols) match {
       case Seq(one) =>
+        // exact names: TypeMapper maps SQL Server `int` to `int`, and
+        // -num narrowing yields `integer`
         table.colByName(one).filter(c =>
-          Seq("smallint", "integer", "bigint")
-            .exists(c.pgType.startsWith)).map(_.name)
+          Set("smallint", "int", "integer", "bigint")(c.pgType)).map(_.name)
       case _ => None
     }
     // match under the source OR the relabeled target schema qualifier

@@ -1391,6 +1391,11 @@ object EventStream {
     * an opCol the stream is treated as insert/update-only — the
     * reference's batch re-sync semantics (FAQ.md:46–48), which can
     * never observe a disappearance inside a micro-batch.
+    *
+    * A CDC micro-batch can carry the same key more than once, so each
+    * batch is repartitioned by PK before the apply: all rows of a key
+    * land in one partition, so no two connections write the same key.
+    * The apply's [[graft.operators.DiffSync.SyncReport]] is not kept.
     */
   /** `trigger` defaults to the production 10-second cadence; tests
     * and gates pass `Trigger.AvailableNow()` to drain a bounded
@@ -1412,7 +1417,9 @@ object EventStream {
           case None =>
             batch.withColumn(graft.operators.DiffSync.FlagCol, lit("changed"))
         }
-        graft.operators.DiffSync.applyToJdbc(flagged, pkCols, target)
+        graft.operators.DiffSync.applyToJdbc(
+          flagged.repartition(pkCols.map(col): _*), pkCols, target)
+        ()
       }
 
   /** Streaming near-dup CANDIDATE pairs — the streaming twin of

@@ -54,8 +54,10 @@ object SyncDemo {
     val diffed = DiffSync.diff(src, tgt, Seq("o_orderkey"))
     diffed.groupBy(DiffSync.FlagCol).count().orderBy(DiffSync.FlagCol)
       .collect().foreach(r => println(s"  ${r.getString(0)}: ${r.getLong(1)}"))
-    DiffSync.applyToJdbc(diffed, Seq("o_orderkey"),
+    val report = DiffSync.applyToJdbc(diffed, Seq("o_orderkey"),
       DiffSync.SyncTarget(url, "orders_t", "", "", dialect = "generic"))
+    println(s"applied: inserted ${report.inserted}, " +
+      s"updated ${report.updated}, deleted ${report.deleted}")
 
     // round-trip: target must now equal source
     val after = spark.read.format("jdbc")

@@ -1,10 +1,15 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.sources.Tables
 import java.sql.DriverManager
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration._
 
 /** End-to-end JDBC integration against embedded Derby (ships with
   * Spark): real INSERT/UPDATE/DELETE round-trips for the copy sink and
@@ -18,6 +23,67 @@ class JdbcIntegrationSpec extends AnyFunSuite with SparkTestBase {
   private def withConn[A](f: java.sql.Connection => A): A = {
     val c = DriverManager.getConnection(url)
     try f(c) finally c.close()
+  }
+
+  /** Creates `table (id, v)` holding `rows`. */
+  private def seed(table: String, rows: Seq[(Long, Double)]): Unit =
+    withConn { c =>
+      c.createStatement().executeUpdate(
+        s"CREATE TABLE $table (id BIGINT NOT NULL PRIMARY KEY, v DOUBLE)")
+      val ps = c.prepareStatement(s"INSERT INTO $table VALUES (?, ?)")
+      rows.foreach { case (id, v) =>
+        ps.setLong(1, id); ps.setDouble(2, v); ps.addBatch()
+      }
+      ps.executeBatch(); ps.close()
+    }
+
+  private def readSide(table: String): DataFrame =
+    Tables.jdbc(spark, Tables.JdbcSpec(url, table, "", ""))
+      .select(col("ID").as("id"), col("V").as("v"))
+
+  private def rowsOf(table: String): Seq[(Long, Double)] = withConn { c =>
+    val rs = c.createStatement()
+      .executeQuery(s"SELECT id, v FROM $table ORDER BY id")
+    val buf = scala.collection.mutable.Buffer[(Long, Double)]()
+    while (rs.next()) buf += ((rs.getLong(1), rs.getDouble(2)))
+    buf.toSeq
+  }
+
+  /** Source 1..200 (v = id) against a target 11..210 whose ids divisible
+    * by 20 hold a stale value: 10 new, 10 changed, 10 deleted rows. */
+  private def seedSyncPair(src: String, tgt: String): Unit = {
+    seed(src, (1L to 200L).map(i => (i, i.toDouble)))
+    seed(tgt, (11L to 210L).map(i => (i, if (i % 20 == 0) i + 0.5 else i.toDouble)))
+  }
+
+  /** Stages submitted under job group `group` while `body` runs. */
+  private def stagesOf(group: String)(body: => Unit): Int = {
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val fenceGroup = s"$group-fence"
+    val fence = Promise[Unit]()
+    def groupOf(p: java.util.Properties) =
+      Option(p).map(_.getProperty("spark.jobGroup.id"))
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (groupOf(e.properties).contains(group)) stages.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (groupOf(e.properties).contains(fenceGroup)) fence.trySuccess(())
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      body
+      // the listener bus delivers events in order: once a later job's
+      // start arrives, every event of `body` has been seen
+      sc.setJobGroup(fenceGroup, fenceGroup)
+      sc.parallelize(Seq(1), 1).count()
+      Await.result(fence.future, 30.seconds)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    stages.get
   }
 
   test("JdbcSink.write appends batched rows into a real JDBC table") {
@@ -52,16 +118,64 @@ class JdbcIntegrationSpec extends AnyFunSuite with SparkTestBase {
       .option("url", url).option("dbtable", "sync_t").load()
       .select(col("ID").as("id"), col("V").as("v"))
     val diffed = DiffSync.diff(src, tgt, Seq("id"))
-    DiffSync.applyToJdbc(diffed, Seq("id"),
+    val report = DiffSync.applyToJdbc(diffed, Seq("id"),
       DiffSync.SyncTarget(url, "sync_t", "", "", dialect = "generic"))
-    val after = withConn { c =>
-      val rs = c.createStatement()
-        .executeQuery("SELECT id, v FROM sync_t ORDER BY id")
-      val buf = scala.collection.mutable.Buffer[(Long, Double)]()
-      while (rs.next()) buf += ((rs.getLong(1), rs.getDouble(2)))
-      buf.toSeq
+    assert(rowsOf("sync_t") === Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)))
+    assert(report === DiffSync.SyncReport(inserted = 1, updated = 1, deleted = 1))
+  }
+
+  test("C16: applyToJdbc writes from the diff join's stages, adding none") {
+    seedSyncPair("shape_src", "shape_tgt")
+    val diffed = DiffSync.diff(readSide("shape_src"), readSide("shape_tgt"),
+      Seq("id"))
+    val noop = stagesOf("shape-noop") {
+      diffed.write.format("noop").mode("overwrite").save()
     }
-    assert(after === Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)))
+    val apply = stagesOf("shape-apply") {
+      DiffSync.applyToJdbc(diffed, Seq("id"),
+        DiffSync.SyncTarget(url, "shape_tgt", "", "", dialect = "generic"))
+    }
+    // two scans feeding the join's exchanges, then the join's result stage
+    assert(noop === 3)
+    // an exchange above the join (a repartition before the writer)
+    // would add a stage
+    assert(apply === noop)
+    assert(rowsOf("shape_tgt") === rowsOf("shape_src"))
+  }
+
+  test("C16: replaying a diff leaves the target where one apply did") {
+    seedSyncPair("replay_src", "replay_tgt")
+    // keep the join's 4 shuffle partitions apart so the applied rows
+    // spread over several tasks
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.getOption(coalesce)
+    spark.conf.set(coalesce, "false")
+    try {
+      // materialized: a replay applies the same rows, not a fresh diff
+      // of the already-synced target
+      val diffed = DiffSync.diff(readSide("replay_src"),
+        readSide("replay_tgt"), Seq("id")).localCheckpoint()
+      val applied = diffed.filter(col(DiffSync.FlagCol) =!= "identical")
+      assert(applied.select(spark_partition_id()).distinct().count() >= 2)
+      val flags = diffed.groupBy(DiffSync.FlagCol).count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(flags === Map("new" -> 10L, "changed" -> 10L,
+        "deleted" -> 10L, "identical" -> 180L))
+      val target = DiffSync.SyncTarget(url, "replay_tgt", "", "",
+        batchSize = 7, dialect = "generic")
+      val report = DiffSync.applyToJdbc(diffed, Seq("id"), target)
+      assert(report === DiffSync.SyncReport(
+        flags("new"), flags("changed"), flags("deleted")))
+      val once = rowsOf("replay_tgt")
+      assert(once === rowsOf("replay_src"))
+      // a retried partition re-applies its rows: upserts and deletes
+      // are idempotent, and the report still counts each row once
+      assert(DiffSync.applyToJdbc(diffed, Seq("id"), target) === report)
+      assert(rowsOf("replay_tgt") === once)
+    } finally prev match {
+      case Some(v) => spark.conf.set(coalesce, v)
+      case None => spark.conf.unset(coalesce)
+    }
   }
 
   test("plannedRead: LOB+int-PK table reads range-partitioned with -pi slices") {

@@ -28,6 +28,12 @@ class JdbcSinkSpec extends AnyFunSuite {
         | CONSTRAINT [PK_Big] PRIMARY KEY CLUSTERED ([id] ASC)
         |) ON [PRIMARY]
         |GO
+        |CREATE TABLE [dbo].[IntLob](
+        |	[id] [int] NOT NULL,
+        |	[payload] [varbinary](max) NULL,
+        | CONSTRAINT [PK_IntLob] PRIMARY KEY CLUSTERED ([id] ASC)
+        |) ON [PRIMARY]
+        |GO
         |CREATE TABLE [dbo].[NoPk](
         |	[v] [int] NOT NULL
         |) ON [PRIMARY]
@@ -43,6 +49,10 @@ class JdbcSinkSpec extends AnyFunSuite {
     import graft.sources.Tables.partitionHint
     // LOB table partitions by its integral PK without any conf opt-in
     assert(partitionHint(t("Big"), conf) === Some("id"))
+    // SQL Server `int` maps to pgType `int`: the same table the Kettle
+    // LOB modulo slice applies to
+    assert(t("IntLob").colByName("id").map(_.pgType) === Some("int"))
+    assert(partitionHint(t("IntLob"), conf) === Some("id"))
     // no PK / string PK → never
     assert(partitionHint(t("NoPk"), conf.copy(usePkIfPossible = "*")) === None)
     assert(partitionHint(t("StrPk"), conf.copy(usePkIfPossible = "*")) === None)
