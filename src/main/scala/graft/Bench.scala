@@ -12,15 +12,7 @@ object Bench {
     val outPath = args.headOption
       .orElse(sys.env.get("SPARK_GRAFT_BENCH_OUT"))
       .getOrElse("BENCH_FULL.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.envCores, Sessions.envCores)
     spark.sparkContext.setLogLevel("WARN")
     // warm up codegen/JIT and the parquet footer cache so the first
     // measured query doesn't absorb session startup cost

@@ -12,7 +12,7 @@ import graft.expressions.{PortableMinHash, PortableSimHash, SignBits, VecDot, Wo
   *
   * Activate with either
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * `.withExtensions(new GraftExtensions)` on the session builder.
   *
   * - `vec_dot(a, b)`            — dot product of float/double arrays
   * - `sign_bits(v, planes, dims)` — hyperplane sign-bit string for LSH

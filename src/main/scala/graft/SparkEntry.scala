@@ -575,12 +575,12 @@ object SparkEntry {
 
   private val streamGateResults = new SessionMemo
 
-  /** Memo bypass for plan-inspecting and timing tools (PlanLint,
-    * ExplainPlans, TimeQuery): a memoized stream gate returns a bare
+  /** Memo bypass for the plan-inspecting and timing modes of
+    * tools.Gates: a memoized stream gate returns a bare
     * LogicalRDD scan of its localCheckpoint — correct data, opaque
     * plan — which would permanently blind the interpreted-path lint
     * to regressions in a stream gate's post-processing and make warm
-    * TimeQuery runs measure a block read. Those tools flip this off;
+    * `Gates time` runs measure a block read. Gates flips this off;
     * bench and Verify (where the memo is the point) leave it on.
     */
   @volatile private[graft] var memoStreamGatesEnabled = true
@@ -594,7 +594,7 @@ object SparkEntry {
     * Flipping this off makes those three gates rebuild their end
     * state from the (still-memoized) fixtures on every call — the
     * real steady-state streaming cost, comparable round over round
-    * like the other 24 gates. Bench's memo-off pass and TimeQuery
+    * like the other 24 gates. Bench's memo-off pass and tools.Gates
     * flip it; Verify and correctness runs leave it on (one execution
     * per JVM either way).
     */
@@ -2737,7 +2737,7 @@ object SparkEntry {
       // Generate — OUTSIDE any whole-stage-codegen pipeline — and the
       // CodegenFallback HOF runs on the fully interpreted row path
       // (measured 11 s vs 1.5 s; the generator itself stays a plain
-      // attribute, which is why PlanLint is rightly silent here)
+      // attribute, which is why the plan lint is rightly silent here)
       val encoded = emb.select(col("vec_id"),
         Similarity.pqEncodeNative(col("embedding"), fine).as("codes"))
         .localCheckpoint()

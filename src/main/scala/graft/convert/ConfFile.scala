@@ -91,7 +91,8 @@ object ConfFile {
   }
 
   /** Parse CLI args into (params, confFile). Accepts both `-opt value`
-    * and `-opt=value` forms for value options, like GetOptions.
+    * and `-opt=value` forms for value options, like GetOptions; a
+    * boolean switch is on when bare, else its inline value decides.
     */
   def parseCli(args: Seq[String]): Seq[(String, String)] = {
     val out = Seq.newBuilder[(String, String)]
@@ -113,7 +114,10 @@ object ConfFile {
               throw ConfException(s"Option -$name requires a value")
             out += name -> args(i + 1); i += 1
         }
-      } else if (boolOpts(name)) out += name -> "1"
+      } else if (boolOpts(name))
+        // a bare switch means on; `-x=0` / `-x=1` carries its value
+        // (GetOptions' negatable form, e.g. -use_identity_column=0)
+        out += name -> (if (inline.forall(boolOf)) "1" else "0")
       else throw ConfException(s"Unknown option -$name")
       i += 1
     }

@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * A native kernel rather than a higher-order fold: the merge runs
   * once per vocab row per round, and an `aggregate`/`transform`
-  * lambda here would land on the interpreted path the PlanLint gate
+  * lambda here would land on the interpreted path the plan-lint gate
   * exists to keep out of hot loops.
   */
 object BpeMerge {

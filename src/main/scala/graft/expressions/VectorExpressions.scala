@@ -567,7 +567,7 @@ case class NearestCellTwoLevel(child: Expression,
   * SQL oracle replays probe selection bit-for-bit; pair distances are
   * exact long sums. A native kernel (not a declarative
   * sort-of-structs) because the probe array feeds a Generate — the
-  * interpreted-Generate trap (PlanLint) — and because K² pair structs
+  * interpreted-Generate trap (the plan lint) — and because K² pair structs
   * would bloat codegen past the 64 KB method limit the PQ LUT
   * already hit.
   */

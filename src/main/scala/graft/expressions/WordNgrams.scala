@@ -108,7 +108,7 @@ private[expressions] object WordTok {
   * over `split(trim([lower(]text[)]), "\s+")` with `size(toks) < n`
   * collapsing to an empty array — but tokenized ONCE per row: the
   * declarative form's `element_at(split(…), i)` lambda re-tokenizes
-  * per element on the interpreted Generate path (the PlanLint trap).
+  * per element on the interpreted Generate path (the plan-lint trap).
   */
 case class WordNgramsAll(child: Expression, n: Int, lowercase: Boolean)
     extends UnaryExpression {
@@ -222,7 +222,7 @@ case class WordChunks(child: Expression, p: Int)
   * `norm = regexp_replace(lower(trim(text)), "\s+", " ")` (the
   * [[graft.functions.Dedup.shingles]] normalization, non-distinct) —
   * but normalized ONCE per row: the declarative lambda re-runs the
-  * regexp per element on the interpreted Generate path (the PlanLint
+  * regexp per element on the interpreted Generate path (the plan-lint
   * trap). Offsets are CODE POINTS (what Spark's substr and DuckDB's
   * substr both count), so the stream replays in the oracle. Text with
   * fewer than n code points yields an empty array.
@@ -279,7 +279,7 @@ case class CharNgramsAll(child: Expression, n: Int)
   * `transform(sequence(1, length(text)−k+1), i → struct(i,
   * substr(text, i, k)))` — but as one codegen'd pass: the declarative
   * lambda runs substr per element on the interpreted Generate path
-  * (the PlanLint trap; measured 8 s of a 7-s-warm gate in the raw
+  * (the plan-lint trap; measured 8 s of a 7-s-warm gate in the raw
   * gram pipeline at sf0.1). Offsets are CODE POINTS (Spark's substr
   * and length, DuckDB's substr — all agree), NO normalization: span
   * extents index into the original text. Shorter-than-k text yields

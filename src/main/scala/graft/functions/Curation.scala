@@ -357,7 +357,7 @@ object Curation {
     def gramBuckets(df: DataFrame, keep: Seq[Column]): DataFrame =
       // native single-pass gram kernels: the declarative
       // element_at(split(…), i) lambda re-tokenized per element on
-      // the interpreted Generate path (PlanLint trap); the kernels
+      // the interpreted Generate path (plan-lint trap); the kernels
       // are bit-identical (unigram stream = token array, bigram
       // stream = sliding windows, empty for < 2 tokens)
       spread(df).select(keep :+ explode(concat(

@@ -1110,7 +1110,7 @@ object Dedup {
     val p = passageTokens
     // native chunk kernel: the declarative slice(split(…)) lambda
     // re-tokenized per passage on the interpreted Generate path
-    // (PlanLint trap) — O(tokens²/p) per doc; the kernel is one pass
+    // (plan-lint trap) — O(tokens²/p) per doc; the kernel is one pass
     val passages = df.select(col(idCol),
         posexplode(TextAnalysis.wordChunksNative(col(textCol), p)))
       .withColumnRenamed("pos", "__idx")

@@ -149,7 +149,7 @@ object TextAnalysis {
   /** Non-distinct word n-gram stream as ONE native kernel —
     * bit-identical to the declarative sliding-window `transform`, but
     * safe to feed a Generate: the declarative form re-tokenizes per
-    * element on the interpreted path (the PlanLint trap,
+    * element on the interpreted path (the plan-lint trap,
     * expressions.WordNgrams doc). n=1 is exactly the token array.
     */
   def wordNgramsAllNative(text: Column, n: Int, lowercase: Boolean): Column =

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.{Curation, Dedup, TextAnalysis}
 
@@ -20,11 +19,7 @@ object CurationDemo {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-curation").toString)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(8, 8)
     spark.sparkContext.setLogLevel("ERROR")
 
     def stage(name: String, n: Long): Unit =

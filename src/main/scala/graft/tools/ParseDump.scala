@@ -1,32 +1,27 @@
 package graft.tools
 
+import graft.convert.ConfFile
 import graft.parser._
-import graft.convert._
 import java.nio.file.Paths
 
 /** CLI: parse a SQL Server DDL dump and print the catalog summary.
   * Mirrors the reference's front half (sqlserver2pgsql.pl -f) — the DDL
-  * emitters hang off the same Catalog (see graft.emit).
+  * emitters hang off the same Catalog (see graft.emit, and Main for the
+  * full before/after/unsure run). Options are Main's (`-i`, `-num`,
+  * `-camel_to_snake`, `-conf <file>`, …), read by `Main.buildJob`.
   *
-  * Usage: runMain graft.tools.ParseDump <dump.sql> [-i] [-num]
-  *   [-camel_to_snake] [-keep_identifier_case] [-drop_rowversion]
+  * Usage: runMain graft.tools.ParseDump <dump.sql> [Main options]
   */
 object ParseDump {
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { System.err.println("usage: ParseDump <dump.sql> [options]"); sys.exit(2) }
     val file = args.head
-    val conf = args.tail.foldLeft(Config()) {
-      case (c, "-i") => c.copy(caseInsensitive = true)
-      case (c, "-num") => c.copy(convertNumericToInt = true)
-      case (c, "-camel_to_snake") =>
-        c.copy(identifierCase = IdentifierCase.CamelToSnake)
-      case (c, "-keep_identifier_case") =>
-        c.copy(identifierCase = IdentifierCase.Keep)
-      case (c, "-drop_rowversion") => c.copy(dropRowversion = true)
-      case (c, "-nr") => c.copy(relabelDbo = false)
-      case (c, other) =>
-        System.err.println(s"unknown option $other"); sys.exit(2); c
-    }
+    val conf =
+      try Main.buildJob("-f" +: args.toSeq).config
+      catch {
+        case e: ConfFile.ConfException =>
+          System.err.println(e.msg); sys.exit(2)
+      }
     val cat =
       try new TsqlParser(conf).parseFile(Paths.get(file))
       catch {

@@ -1437,279 +1437,143 @@ object ScaleSmoke {
     }
   }
 
+  /** Reliable-vs-local lineage-cut overhead for the iterative ops
+    * (round 16): the checkpointDir option buys executor-loss recovery
+    * at the cost of one distributed write of the node-sized frame per
+    * round — this prints that delta so the default stays fast on
+    * purpose.
+    */
+  private def ckptSweep(sp: SparkSession, n: Int): Unit = {
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    try {
+      // chain of n nodes + random chords: multi-round CC work
+      val chain = sp.range(n - 1L).select(col("id").as("a"),
+        (col("id") + 1).as("b"))
+      val chords = sp.range(n / 10L).select(
+        pmod(col("id") * 2654435761L, lit(n.toLong)).as("a"),
+        pmod(col("id") * 1315423911L, lit(n.toLong)).as("b"))
+      val edges = chain.unionAll(chords).localCheckpoint()
+      edges.count()
+      val seeds = sp.range(20).select(
+        (col("id") * (n / 20)).as("n"), col("id").as("lbl"))
+      // warmup: JIT + codegen for BOTH variants' plans on a toy
+      // graph, so the timed runs compare operators, not HotSpot
+      // compile order (the first variant timed otherwise absorbs it)
+      val toyE = sp.range(500).select(col("id").as("a"),
+        (col("id") + 1).as("b")).localCheckpoint()
+      val toyS = sp.range(4).select((col("id") * 100).as("n"),
+        col("id").as("lbl"))
+      graft.functions.Dedup.connectedComponentsStar(toyE, "a", "b").count()
+      graft.functions.Dedup.connectedComponentsStar(toyE, "a", "b",
+        checkpointDir = Some(ckptDir.toString)).count()
+      graft.operators.Graph.labelPropagateConverged(
+        toyE, "a", "b", toyS, "n", "lbl", maxIters = 4)._1.count()
+      graft.operators.Graph.labelPropagateConverged(
+        toyE, "a", "b", toyS, "n", "lbl", maxIters = 4,
+        checkpointDir = Some(ckptDir.toString))._1.count()
+      val (cLocal, tLocal) = timed(
+        graft.functions.Dedup.connectedComponentsStar(
+          edges, "a", "b").count())
+      val (cRel, tRel) = timed(
+        graft.functions.Dedup.connectedComponentsStar(
+          edges, "a", "b",
+          checkpointDir = Some(ckptDir.toString)).count())
+      require(cLocal == cRel, s"cc parity broke: $cLocal vs $cRel")
+      println(f"cc_star n=$n%d: local ${tLocal}%.2f s vs reliable " +
+        f"${tRel}%.2f s (overhead ${(tRel / tLocal - 1) * 100}%.0f%%)")
+      // fixed SMALL round count: the sweep measures PER-ROUND cut
+      // overhead (write of a node-sized frame), not convergence —
+      // a chain this size would otherwise run for minutes
+      val lpaIters = 8
+      val (l1, t1) = timed {
+        val (lf, st) = graft.operators.Graph.labelPropagateConverged(
+          edges, "a", "b", seeds, "n", "lbl", maxIters = lpaIters)
+        (lf.count(), st.length)
+      }
+      val (l2, t2) = timed {
+        val (lf, st) = graft.operators.Graph.labelPropagateConverged(
+          edges, "a", "b", seeds, "n", "lbl", maxIters = lpaIters,
+          checkpointDir = Some(ckptDir.toString))
+        (lf.count(), st.length)
+      }
+      require(l1 == l2, s"lpa parity broke: $l1 vs $l2")
+      println(f"lpa n=$n%d (${l1._2}%d rounds): local ${t1}%.2f s vs " +
+        f"reliable ${t2}%.2f s (overhead ${(t2 / t1 - 1) * 100}%.0f%%)")
+    } finally {
+      val w = java.nio.file.Files.walk(ckptDir)
+      try w.sorted(java.util.Comparator
+          .reverseOrder[java.nio.file.Path]())
+        .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
+      finally w.close()
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    if (args.length > 1 && args(1) == "manifest") {
-      val phases = if (args.length > 2) args.drop(2).map(_.toInt).toSeq
-                   else Seq(100, 1000, 10000)
-      val sp = SparkSession.builder().master("local[4]")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    val cpus = graft.Sessions.envCores
+    // a mode's numeric arguments (after the mode name), else its defaults
+    def ints(defaults: Int*): Seq[Int] =
+      if (args.length > 2) args.drop(2).map(_.toInt).toSeq else defaults
+    def sweep(cores: Int = cpus, partitions: Int = cpus)(
+        body: SparkSession => Unit): Unit = {
+      val sp = graft.Sessions.local(cores, partitions)
       sp.sparkContext.setLogLevel("WARN")
-      manifestSweep(sp, phases, per = 40)
+      body(sp)
       sp.stop()
-      return
     }
-    if (args.length > 1 && args(1) == "ckpt") {
-      // reliable-vs-local lineage-cut overhead for the iterative ops
-      // (round 16): the checkpointDir option buys executor-loss
-      // recovery at the cost of one distributed write of the
-      // node-sized frame per round — this prints that delta so the
-      // default stays fast on purpose.
-      val n = if (args.length > 2) args(2).toInt else 200000
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val sp = SparkSession.builder().master(s"local[$cpus0]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      sp.sparkContext.setLogLevel("WARN")
-      val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt")
-      try {
-        // chain of n nodes + random chords: multi-round CC work
-        val chain = sp.range(n - 1L).select(col("id").as("a"),
-          (col("id") + 1).as("b"))
-        val chords = sp.range(n / 10L).select(
-          pmod(col("id") * 2654435761L, lit(n.toLong)).as("a"),
-          pmod(col("id") * 1315423911L, lit(n.toLong)).as("b"))
-        val edges = chain.unionAll(chords).localCheckpoint()
-        edges.count()
-        val seeds = sp.range(20).select(
-          (col("id") * (n / 20)).as("n"), col("id").as("lbl"))
-        // warmup: JIT + codegen for BOTH variants' plans on a toy
-        // graph, so the timed runs compare operators, not HotSpot
-        // compile order (the first variant timed otherwise absorbs it)
-        val toyE = sp.range(500).select(col("id").as("a"),
-          (col("id") + 1).as("b")).localCheckpoint()
-        val toyS = sp.range(4).select((col("id") * 100).as("n"),
-          col("id").as("lbl"))
-        graft.functions.Dedup.connectedComponentsStar(toyE, "a", "b").count()
-        graft.functions.Dedup.connectedComponentsStar(toyE, "a", "b",
-          checkpointDir = Some(ckptDir.toString)).count()
-        graft.operators.Graph.labelPropagateConverged(
-          toyE, "a", "b", toyS, "n", "lbl", maxIters = 4)._1.count()
-        graft.operators.Graph.labelPropagateConverged(
-          toyE, "a", "b", toyS, "n", "lbl", maxIters = 4,
-          checkpointDir = Some(ckptDir.toString))._1.count()
-        val (cLocal, tLocal) = timed(
-          graft.functions.Dedup.connectedComponentsStar(
-            edges, "a", "b").count())
-        val (cRel, tRel) = timed(
-          graft.functions.Dedup.connectedComponentsStar(
-            edges, "a", "b",
-            checkpointDir = Some(ckptDir.toString)).count())
-        require(cLocal == cRel, s"cc parity broke: $cLocal vs $cRel")
-        println(f"cc_star n=$n%d: local ${tLocal}%.2f s vs reliable " +
-          f"${tRel}%.2f s (overhead ${(tRel / tLocal - 1) * 100}%.0f%%)")
-        // fixed SMALL round count: the sweep measures PER-ROUND cut
-        // overhead (write of a node-sized frame), not convergence —
-        // a chain this size would otherwise run for minutes
-        val lpaIters = 8
-        val (l1, t1) = timed {
-          val (lf, st) = graft.operators.Graph.labelPropagateConverged(
-            edges, "a", "b", seeds, "n", "lbl", maxIters = lpaIters)
-          (lf.count(), st.length)
-        }
-        val (l2, t2) = timed {
-          val (lf, st) = graft.operators.Graph.labelPropagateConverged(
-            edges, "a", "b", seeds, "n", "lbl", maxIters = lpaIters,
-            checkpointDir = Some(ckptDir.toString))
-          (lf.count(), st.length)
-        }
-        require(l1 == l2, s"lpa parity broke: $l1 vs $l2")
-        println(f"lpa n=$n%d (${l1._2}%d rounds): local ${t1}%.2f s vs " +
-          f"reliable ${t2}%.2f s (overhead ${(t2 / t1 - 1) * 100}%.0f%%)")
-      } finally {
-        val w = java.nio.file.Files.walk(ckptDir)
-        try w.sorted(java.util.Comparator
-            .reverseOrder[java.nio.file.Path]())
-          .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-        finally w.close()
-      }
-      sp.stop()
-      return
+    // a fixture table, read once up front so the sweep times warm reads
+    def warm(sp: SparkSession, table: String): DataFrame = {
+      val df = sp.read.parquet(s"$sfDir/$table.parquet")
+      df.count()
+      df
     }
-    if (args.length > 1 && args(1) == "race2") {
-      val rounds = if (args.length > 2) args(2).toInt else 6
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val sp = SparkSession.builder().master(s"local[$cpus0]")
-        .config("spark.sql.shuffle.partitions", cpus0)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      sp.sparkContext.setLogLevel("WARN")
-      val e0 = sp.read.parquet(s"$sfDir/embeddings.parquet")
-      e0.count()
-      race2Sweep(sp, e0, rounds)
-      sp.stop()
-      return
+    val modes: Map[String, () => Unit] = Map(
+      // Spark's default 200 shuffle partitions
+      "manifest" -> (() => sweep(4, 200)(
+        manifestSweep(_, ints(100, 1000, 10000), per = 40))),
+      "ckpt" -> (() => sweep(partitions = 16)(ckptSweep(_, ints(200000).head))),
+      "race2" -> (() => sweep()(sp => race2Sweep(sp, warm(sp, "embeddings"), ints(6).head))),
+      "race" -> (() => sweep()(sp => raceSweep(sp, warm(sp, "embeddings"), ints(8).head))),
+      "pattern" -> (() => {
+        val Seq(nb, us, cp) = ints(120, 128, 200)
+        sweep(partitions = 8)(patternSweep(_, nb, us, cp))
+      }),
+      // state ops parallelize per shuffle partition — at the 10^6-key
+      // sweep scale the 8-partition default left half the box idle
+      "churn" -> (() => {
+        val Seq(nb, us, cp) = ints(60, 256, 40)
+        sweep()(churnSweep(_, nb, us, cp))
+      }),
+      "churnspill" -> (() => {
+        val Seq(nb, us, cp) = ints(30, 2000, 50)
+        sweep()(churnSpillSweep(_, nb, us, cp))
+      }),
+      "gannskew" -> (() => sweep()(sp =>
+        gannSkewSweep(sp, warm(sp, "embeddings"), ints(1, 4, 16)))),
+      "compact" -> (() => sweep()(sp =>
+        compactSweep(sp, warm(sp, "embeddings"), ints(4, 16, 64)))),
+      "gann" -> (() => sweep()(sp =>
+        gannSweep(sp, warm(sp, "embeddings"), ints(1, 4, 16)))),
+      "pipeline" -> (() => sweep()(sp =>
+        pipelineSweep(sp, warm(sp, "documents"), ints(1, 4, 16, 64)))),
+      "imi" -> (() => imiSweep(ints(128, 512, 2048, 8192, 16384))),
+      "bpe" -> (() => sweep()(sp =>
+        bpeSweep(sp, sp.read.parquet(s"$sfDir/documents.parquet")))),
+      "trees" -> (() => sweep()(sp =>
+        treeSweep(sp, warm(sp, "embeddings"), ints(4096, 8192, 16384)))))
+    modes.get(args.lift(1).getOrElse("")) match {
+      case Some(run) => run()
+      case None =>
+        val factors = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
+                      else Seq(1, 2, 4)
+        sweep()(factorSweep(_, sfDir, factors))
+        sys.exit(0)
     }
-    if (args.length > 1 && args(1) == "race") {
-      val rounds = if (args.length > 2) args(2).toInt else 8
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val sp = SparkSession.builder().master(s"local[$cpus0]")
-        .config("spark.sql.shuffle.partitions", cpus0)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      sp.sparkContext.setLogLevel("WARN")
-      val e0 = sp.read.parquet(s"$sfDir/embeddings.parquet")
-      e0.count()
-      raceSweep(sp, e0, rounds)
-      sp.stop()
-      return
-    }
-    if (args.length > 1 && args(1) == "pattern") {
-      val (nb, us, cp) =
-        if (args.length > 4) (args(2).toInt, args(3).toInt, args(4).toInt)
-        else (120, 128, 200)
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val sp = SparkSession.builder().master(s"local[$cpus0]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      sp.sparkContext.setLogLevel("WARN")
-      patternSweep(sp, nb, us, cp)
-      sp.stop()
-      return
-    }
-    if (args.length > 1 && args(1) == "churn") {
-      val (nb, us, cp) =
-        if (args.length > 4) (args(2).toInt, args(3).toInt, args(4).toInt)
-        else (60, 256, 40)
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val sp = SparkSession.builder().master(s"local[$cpus0]")
-        // state ops parallelize per shuffle partition — at the 10^6-key
-        // sweep scale the 8-partition default left half the box idle
-        .config("spark.sql.shuffle.partitions", cpus0)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      sp.sparkContext.setLogLevel("WARN")
-      churnSweep(sp, nb, us, cp)
-      sp.stop()
-      return
-    }
-    if (args.length > 1 && args(1) == "churnspill") {
-      val (nb, us, cp) =
-        if (args.length > 4) (args(2).toInt, args(3).toInt, args(4).toInt)
-        else (30, 2000, 50)
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val sp = SparkSession.builder().master(s"local[$cpus0]")
-        .config("spark.sql.shuffle.partitions", cpus0)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      sp.sparkContext.setLogLevel("WARN")
-      churnSpillSweep(sp, nb, us, cp)
-      sp.stop()
-      return
-    }
-    if (args.length > 1 && args(1) == "gannskew") {
-      val factors = if (args.length > 2) args.drop(2).map(_.toInt).toSeq
-                    else Seq(1, 4, 16)
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val sp = SparkSession.builder().master(s"local[$cpus0]")
-        .config("spark.sql.shuffle.partitions", cpus0)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      sp.sparkContext.setLogLevel("WARN")
-      val e0 = sp.read.parquet(s"$sfDir/embeddings.parquet")
-      e0.count()
-      gannSkewSweep(sp, e0, factors)
-      sp.stop()
-      return
-    }
-    if (args.length > 1 && args(1) == "compact") {
-      val batchCounts = if (args.length > 2) args.drop(2).map(_.toInt).toSeq
-                        else Seq(4, 16, 64)
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val sp = SparkSession.builder().master(s"local[$cpus0]")
-        .config("spark.sql.shuffle.partitions", cpus0)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      sp.sparkContext.setLogLevel("WARN")
-      val e0 = sp.read.parquet(s"$sfDir/embeddings.parquet")
-      e0.count()
-      compactSweep(sp, e0, batchCounts)
-      sp.stop()
-      return
-    }
-    if (args.length > 1 && args(1) == "gann") {
-      val factors = if (args.length > 2) args.drop(2).map(_.toInt).toSeq
-                    else Seq(1, 4, 16)
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val sp = SparkSession.builder().master(s"local[$cpus0]")
-        .config("spark.sql.shuffle.partitions", cpus0)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      sp.sparkContext.setLogLevel("WARN")
-      val e0 = sp.read.parquet(s"$sfDir/embeddings.parquet")
-      e0.count()
-      gannSweep(sp, e0, factors)
-      sp.stop()
-      return
-    }
-    if (args.length > 1 && args(1) == "pipeline") {
-      val factors = if (args.length > 2) args.drop(2).map(_.toInt).toSeq
-                    else Seq(1, 4, 16, 64)
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val sp = SparkSession.builder().master(s"local[$cpus0]")
-        .config("spark.sql.shuffle.partitions", cpus0)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      sp.sparkContext.setLogLevel("WARN")
-      val d0 = sp.read.parquet(s"$sfDir/documents.parquet")
-      d0.count()
-      pipelineSweep(sp, d0, factors)
-      sp.stop()
-      return
-    }
-    if (args.length > 1 && args(1) == "imi") {
-      val ks = if (args.length > 2) args.drop(2).map(_.toInt).toSeq
-               else Seq(128, 512, 2048, 8192, 16384)
-      imiSweep(ks)
-      return
-    }
-    if (args.length > 1 && args(1) == "bpe") {
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val sp = SparkSession.builder().master(s"local[$cpus0]")
-        .config("spark.sql.shuffle.partitions", cpus0)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      sp.sparkContext.setLogLevel("WARN")
-      bpeSweep(sp, sp.read.parquet(s"$sfDir/documents.parquet"))
-      sp.stop()
-      return
-    }
-    if (args.length > 1 && args(1) == "trees") {
-      val nlists = if (args.length > 2) args.drop(2).map(_.toInt).toSeq
-                   else Seq(4096, 8192, 16384)
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val sp = SparkSession.builder().master(s"local[$cpus0]")
-        .config("spark.sql.shuffle.partitions", cpus0)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      sp.sparkContext.setLogLevel("WARN")
-      val e0 = sp.read.parquet(s"$sfDir/embeddings.parquet")
-      e0.count()
-      treeSweep(sp, e0, nlists)
-      sp.stop()
-      return
-    }
-    val factors = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
-                  else Seq(1, 2, 4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  }
+
+  /** The default mode: every hot path at each corpus scale factor. */
+  private def factorSweep(spark: SparkSession, sfDir: String,
+      factors: Seq[Int]): Unit = {
     val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
     val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
     // warmup
@@ -1959,7 +1823,5 @@ object ScaleSmoke {
       docs.unpersist()
     }
     nbModel.unpersist(); nbPriors.unpersist()
-    spark.stop()
-    sys.exit(0)
   }
 }

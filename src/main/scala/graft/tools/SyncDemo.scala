@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{DiffSync, JdbcSink}
 import java.sql.DriverManager
@@ -17,11 +16,7 @@ object SyncDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val url = "jdbc:derby:memory:syncdemo;create=true"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(4, 4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val conn = DriverManager.getConnection(url)

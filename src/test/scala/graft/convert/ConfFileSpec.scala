@@ -102,6 +102,15 @@ class ConfFileSpec extends AnyFunSuite {
     assert(job.dumpFile === Some("/d.sql"))
   }
 
+  test("-use_identity_column=0 binds useIdentityColumn = false") {
+    def identity(args: String*) =
+      graft.tools.Main.buildJob(args).config.useIdentityColumn
+    assert(!identity("-use_identity_column=0"))
+    assert(identity("-use_identity_column=1"))
+    assert(identity("-use_identity_column"))   // bare switch: on
+    assert(identity())                         // default: on
+  }
+
   test("keep_identifier_case + camel_to_snake is rejected") {
     intercept[ConfFile.ConfException] {
       ConfFile.toJob(Map("keep_identifier_case" -> "1",
