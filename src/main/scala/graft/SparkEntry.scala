@@ -207,10 +207,10 @@ object SparkEntry {
     val u = "jdbc:derby:memory:graft_sync_" +
       java.util.UUID.randomUUID().toString.replace("-", "") +
       ";create=true"
-    // DDL-create with UNQUOTED identifiers (Derby uppercases them
-    // — what applyToJdbc's unquoted SQL expects); Spark's append
-    // writer then resolves names against the existing table
-    // case-insensitively (the SyncDemo pattern)
+    // DDL-create with UNQUOTED identifiers (Derby uppercases them);
+    // the JDBC partition writer resolves the lower-case DataFrame
+    // columns against the existing table case-insensitively (the
+    // SyncDemo pattern)
     val conn = java.sql.DriverManager.getConnection(u)
     try conn.createStatement().executeUpdate(
       "CREATE TABLE SYNC_TARGET (o_orderkey BIGINT NOT NULL " +

@@ -227,9 +227,16 @@ object ConfFile {
       colMapFile = p.get("col_map_file"),
       colMapHeader = p.get("col_map_file_header").exists(boolOf),
       colMapDelimiter = p.getOrElse("col_map_file_delimiter", "\t"),
-      sqlServer = Seq("sd", "sh", "si", "sp", "su", "sw", "sforce_ssl")
-        .flatMap(k => p.get(k).map(k -> _)).toMap,
-      postgres = Seq("pd", "ph", "pp", "pu", "pw", "pforce_ssl")
-        .flatMap(k => p.get(k).map(k -> _)).toMap)
+      sqlServer = endpoint(p, Seq("sd", "sh", "si", "sp", "su", "sw"), "sforce_ssl"),
+      postgres = endpoint(p, Seq("pd", "ph", "pp", "pu", "pw"), "pforce_ssl"))
   }
+
+  /** Connection params; the force-ssl switch is kept only when on, so
+    * its presence is what the JDBC URLs and Kettle blocks test
+    * (`-sforce_ssl=0` or `... force ssl = 0` leaves SSL off).
+    */
+  private def endpoint(p: Map[String, String], keys: Seq[String],
+      ssl: String): Map[String, String] =
+    keys.flatMap(k => p.get(k).map(k -> _)).toMap ++
+      p.get(ssl).filter(boolOf).map(ssl -> _)
 }

@@ -121,10 +121,6 @@ object Dedup {
       }))
     }: _*)
 
-  def minhashSignature(text: Column, numHashes: Int = 16,
-      ngramN: Int = 3): Column =
-    minhashFromNgrams(wordNgrams(text, ngramN), numHashes)
-
   /** LSH banding: split the signature into `bands` bands and hash each;
     * docs sharing any band hash are candidates. Emits (id, band_id,
     * band_hash) — exploded, so the candidate join is a self-equi-join

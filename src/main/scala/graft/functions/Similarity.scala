@@ -1731,8 +1731,6 @@ object Similarity {
     bits.reduce((a, b) => a.bitwiseOR(b))
   }
 
-  def simhash64(text: Column): Column = simhashFromHashes(tokenHashes(text))
-
   // ------------------------------------------------------------------
   // Product quantization (Jégou, Douze, Schmid 2011, "Product
   // Quantization for Nearest Neighbor Search" — public paper): the

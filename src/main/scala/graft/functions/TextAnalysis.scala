@@ -1483,17 +1483,10 @@ object TextAnalysis {
   }
 
   /** Winnowing-style shingle fingerprint: minimum md5 over all k-char
-    * shingles — a rolling-hash document sketch. Identical results are a
-    * strong near-dup signal under small edits. Pure higher-order array
-    * functions (transform over a sequence), still no UDF.
-    */
-  def shingleFingerprint(text: Column, k: Int = 8): Column =
-    shingleFingerprintFromNorm(
-      regexp_replace(lower(trim(text)), "\\s+", " "), k)
-
-  /** Hot-path variant taking a MATERIALIZED normalized-text column —
-    * an inline regexp_replace would re-evaluate once per shingle
-    * inside the lambda (see Dedup.wordNgramsFromTokens).
+    * shingles of a MATERIALIZED normalized-text column (an inline
+    * regexp_replace would re-evaluate once per shingle inside the
+    * lambda, see Dedup.wordNgramsFromTokens). Identical results are a
+    * strong near-dup signal under small edits.
     */
   def shingleFingerprintFromNorm(norm: Column, k: Int = 8): Column = {
     val n = greatest(length(norm) - lit(k - 1), lit(1))

@@ -5,18 +5,14 @@ import org.apache.spark.sql.functions._
 
 /** C11–C18: incremental synchronization, Spark-first.
   *
-  * The reference's Kettle pipeline reads BOTH databases, external-sorts
-  * each stream on the PK, runs a sorted full-outer diff (`MergeRows
-  * (diff)`, pl:4662–4689) tagging rows new/changed/deleted/identical,
-  * then applies per-row insert/update/delete (`SynchronizeAfterMerge`,
-  * pl:4628–4660).
-  *
-  * In Spark the sort+merge is one declarative full-outer join — Catalyst
-  * picks sort-merge join and the shuffle IS the external sort (C13/C14
-  * for free). Classification is a codegen'd projection. At 100 TB the
-  * only shuffle is the join's own hash partitioning on the PK, which is
-  * unavoidable and optimal; if both sides are bucketed on the PK the
-  * shuffle disappears entirely.
+  * The reference's Kettle pipeline external-sorts both databases on the
+  * PK, runs a sorted full-outer diff (`MergeRows (diff)`, pl:4662–4689)
+  * tagging rows new/changed/deleted/identical, then applies per-row
+  * insert/update/delete (`SynchronizeAfterMerge`, pl:4628–4660). Here
+  * the sort+merge is one full-outer join (the shuffle IS the external
+  * sort, C13/C14) and classification a codegen'd projection: the only
+  * shuffle is the join's own on the PK, gone when both sides are
+  * bucketed on it.
   */
 object DiffSync {
 
@@ -47,13 +43,13 @@ object DiffSync {
     * compare = source stream (pl:4677–4678): `new` means "in source,
     * missing from target" (must be inserted), `deleted` means "in
     * target, gone from source".
-    */
-  /** `nullSafePk = true` joins PKs with `<=>` so NULL keys pair up —
-    * only for degenerate sources; the rewrite Spark applies to
-    * null-safe join keys (`coalesce(k, 0), isnull(k)`) disqualifies
-    * bucketed-scan co-location, so the default (plain equality, PKs
-    * are NOT NULL by definition) is what keeps the 100 TB bucketed
-    * diff shuffle-free. Value comparison stays null-safe either way.
+    *
+    * `nullSafePk = true` joins PKs with `<=>` so NULL keys pair up —
+    * only for degenerate sources; Spark's rewrite of null-safe join
+    * keys (`coalesce(k, 0), isnull(k)`) disqualifies bucketed-scan
+    * co-location, so the default (plain equality, PKs are NOT NULL)
+    * keeps the bucketed diff shuffle-free. Value comparison stays
+    * null-safe either way.
     */
   def diff(source: DataFrame, target: DataFrame,
       pkCols: Seq[String], nullSafePk: Boolean = false): DataFrame = {
@@ -85,18 +81,13 @@ object DiffSync {
       .select(outPk ++ outVals :+ flag.as(FlagCol): _*)
   }
 
-  /** Sampled spot-check diff — the 100 TB migration-audit shape when
-    * even the digest pass is too much I/O: BOTH sides keep only the
-    * deterministic `1/modulus` PK-hash slice (md5-derived, engine-
-    * portable, so source and target select the SAME keys with no
-    * coordination), then run the full diff classification on the
-    * sample. A clean sample bounds the row-error rate at roughly
-    * 3/sample_size with 95% confidence (rule of three); any hit
-    * escalates to `digestDiff`/`diff` on the affected range.
-    *
-    * The sample filter is a map-side predicate on the scan — at a
-    * bucketed/partitioned store it prunes I/O before the network, and
-    * the diff join shuffles only the sliver.
+  /** Sampled spot-check diff, for audits where even the digest pass is
+    * too much I/O: BOTH sides keep only the deterministic `1/modulus`
+    * PK-hash slice (md5-derived, engine-portable, so both select the SAME
+    * keys), then run the full diff on it. A clean sample bounds the
+    * row-error rate at ~3/sample_size with 95% confidence (rule of
+    * three); any hit escalates to `digestDiff`/`diff`. The filter is a
+    * map-side scan predicate, so the join shuffles only the sliver.
     */
   def sampledDiff(source: DataFrame, target: DataFrame,
       pkCols: Seq[String], modulus: Int, slot: Int = 0): DataFrame = {
@@ -109,13 +100,6 @@ object DiffSync {
     diff(keep(source), keep(target), pkCols)
   }
 
-  /** Per-bucket digests for Merkle-style change detection: rows hash to
-    * `nBuckets` buckets by PK, each bucket aggregates (row count,
-    * XOR of full-row hashes). Equal digests ⇒ identical bucket content
-    * (up to 64-bit hash collision odds); the aggregation is map-side
-    * partial, so a digest pass moves nBuckets rows per partition —
-    * not the table — through the shuffle.
-    */
   /** Row hash for the digest. `xxhash64` SKIPS null children (a null
     * input leaves the hash state unchanged), so hashing raw columns
     * makes (pk, 'x', NULL) and (pk, NULL, 'x') collide — exactly the
@@ -127,6 +111,13 @@ object DiffSync {
     xxhash64(df.columns.toIndexedSeq
       .flatMap(c => Seq(col(c), isnull(col(c)))): _*)
 
+  /** Per-bucket digests for Merkle-style change detection: rows hash to
+    * `nBuckets` buckets by PK, each bucket aggregates (row count,
+    * XOR of full-row hashes). Equal digests ⇒ identical bucket content
+    * (up to 64-bit hash collision odds); the aggregation is map-side
+    * partial, so a digest pass moves nBuckets rows per partition —
+    * not the table — through the shuffle.
+    */
   private[operators] def bucketDigests(df: DataFrame, pkCols: Seq[String],
       nBuckets: Int): DataFrame =
     df.withColumn("__bkt", pmod(xxhash64(pkCols.map(col): _*), lit(nBuckets)))
@@ -147,18 +138,13 @@ object DiffSync {
       .select(coalesce(col("ds.__bkt"), col("dt.__bkt")).as("__bkt"))
   }
 
-  /** C15 at 100 TB when most rows are unchanged: Merkle-pruned diff.
-    * Both sides aggregate per-bucket digests (tiny shuffles), buckets
-    * with equal digests are skipped, and the full-outer diff runs only
-    * over rows of dirty buckets. Returns only non-identical rows
-    * (`new`/`changed`/`deleted`) — exactly `diff(...)` minus
-    * `identical`, which is what a sync consumes.
-    *
-    * The second pass re-reads both inputs restricted by a broadcast
-    * semi-join on the dirty-bucket ids; with inputs bucketed/partitioned
-    * by `pmod(xxhash64(pk), nBuckets)` that restriction prunes I/O too,
-    * and a stored digest table from the previous sync replaces one
-    * side's digest pass entirely (incremental state).
+  /** C15 when most rows are unchanged: Merkle-pruned diff. Both sides
+    * aggregate per-bucket digests (tiny shuffles), and the full-outer
+    * diff runs only over rows of buckets whose digests differ, restricted
+    * by a broadcast semi-join on the dirty-bucket ids (which prunes I/O
+    * too on inputs bucketed by `pmod(xxhash64(pk), nBuckets)`; a stored
+    * digest table from the previous sync can replace one side's pass).
+    * Returns exactly `diff(...)` minus `identical`, what a sync consumes.
     */
   def digestDiff(source: DataFrame, target: DataFrame, pkCols: Seq[String],
       nBuckets: Int = 4096): DataFrame = {
@@ -172,130 +158,55 @@ object DiffSync {
       .filter(col(FlagCol) =!= "identical")
   }
 
-  /** C16 (set-based half): apply the classified diff to produce the
-    * synchronized table — insert `new`, keep `changed` (source values),
-    * keep `identical`, drop `deleted`. The result equals the source
-    * table; computing it through the diff exercises the full path and
-    * is how a target-side `MERGE INTO` would be staged.
-    */
+  /** C16 (set-based half): the synchronized table from the classified
+    * diff — keep `new`, `changed` (source values) and `identical`, drop
+    * `deleted` — as a target-side `MERGE INTO` would be staged. */
   def applyDiff(diffed: DataFrame): DataFrame =
     diffed.filter(col(FlagCol) =!= "deleted").drop(FlagCol)
 
-  /** C16 (JDBC half): per-partition upsert/delete writer. Spark's JDBC
-    * sink is insert-only, so the apply step batches
-    * INSERT … ON CONFLICT DO UPDATE / DELETE over each partition —
-    * parallel across partitions, batched within (commit interval
-    * mirrors the reference's 100-row commits, pl:3693).
+  /** C16 (JDBC half): the classified diff, minus `identical` rows,
+    * through [[JdbcSink.writePartition]] in the diff join's own result
+    * stage: `new` → INSERT, `changed` → UPDATE (INSERT when it matched
+    * no row), `deleted` → DELETE by PK, all batched and committed every
+    * `batchSize` rows (the reference's 100, pl:3693); the "postgresql"
+    * dialect upserts `new` and `changed` with `upsertSql`. Columns
+    * resolve against the target case-insensitively.
     *
     * The input must hold each PK at most once, so no two partitions
-    * ever write the same key and per-key ordering needs no shuffle of
-    * its own. `diff` guarantees it: source and target PKs are each
-    * unique, so the full-outer join emits every key in exactly one
-    * row, and the writer runs in the join's own result stage (the
-    * object-level "only shuffle is the join's" claim). Callers whose
-    * input can repeat a key — a CDC micro-batch — repartition by PK
-    * first (`EventStream.continuousSyncWriter` does).
-    *
-    * `identical` rows are dropped before the writer. The returned
-    * [[SyncReport]] counts applied rows per flag (`new` → inserted,
-    * `deleted` → deleted, any other flag → updated) through
-    * accumulators updated inside the action, which Spark merges once
-    * per successful task — a retried partition is not double-counted.
-    */
-  /** `dialect`: "postgresql" batches `INSERT … ON CONFLICT DO UPDATE`;
-    * "generic" runs portable UPDATE-then-INSERT per row (works on any
-    * JDBC target — Derby, H2, …) at the cost of batching.
-    */
+    * write the same key: `diff` guarantees it; a CDC micro-batch is
+    * repartitioned by PK first. [[SyncReport]] counts applied rows per
+    * flag (`new` → inserted, `deleted` → deleted, other → updated). */
   final case class SyncTarget(url: String, table: String, user: String,
-      password: String, batchSize: Int = 100,
-      dialect: String = "postgresql")
+      password: String, batchSize: Int = 100, dialect: String = "postgresql")
 
-  /** Rows `applyToJdbc` applied, per flag. */
-  final case class SyncReport(inserted: Long, updated: Long, deleted: Long)
+  /** Rows `applyToJdbc` applied, per flag, and rows it rejected. */
+  final case class SyncReport(inserted: Long, updated: Long, deleted: Long, rejected: Long = 0)
 
   def applyToJdbc(diffed: DataFrame, pkCols: Seq[String],
       target: SyncTarget): SyncReport = {
-    val valueCols = diffed.columns
-      .filterNot(c => pkCols.contains(c) || c == FlagCol).toIndexedSeq
-    val allCols = pkCols ++ valueCols
-    val insertSql = upsertSql(target.table, pkCols, valueCols)
-    val plainInsertSql = s"INSERT INTO ${target.table} " +
-      s"(${allCols.mkString(", ")}) VALUES " +
-      s"(${allCols.map(_ => "?").mkString(", ")})"
-    val updateSql =
-      if (valueCols.isEmpty) "" else s"UPDATE ${target.table} SET " +
-        valueCols.map(c => s"$c = ?").mkString(", ") + " WHERE " +
-        pkCols.map(c => s"$c = ?").mkString(" AND ")
-    val deleteSql = s"DELETE FROM ${target.table} WHERE " +
-      pkCols.map(c => s"$c = ?").mkString(" AND ")
-    // row positions resolved once per call, not per column per row
-    val schema = diffed.schema
-    val flagIdx = schema.fieldIndex(FlagCol)
-    val pkIdx = pkCols.map(schema.fieldIndex).toArray
-    val allIdx = allCols.map(schema.fieldIndex).toArray
-    // UPDATE binds value columns, then the PK in its WHERE clause
-    val updIdx = valueCols.map(schema.fieldIndex).toArray ++ pkIdx
-    val generic = target.dialect != "postgresql"
-    val sc = diffed.sparkSession.sparkContext
-    val inserted = sc.longAccumulator("sync.inserted")
-    val updated = sc.longAccumulator("sync.updated")
-    val deleted = sc.longAccumulator("sync.deleted")
-    diffed.filter(col(FlagCol) =!= "identical")
-      .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        val conn = java.sql.DriverManager.getConnection(
-          target.url, target.user, target.password)
-        conn.setAutoCommit(false)
-        val ins = conn.prepareStatement(
-          if (generic) plainInsertSql else insertSql)
-        val upd = if (generic && updateSql.nonEmpty)
-          Some(conn.prepareStatement(updateSql)) else None
-        val del = conn.prepareStatement(deleteSql)
-        var pendingIns = 0; var pendingDel = 0; var pendingGen = 0
-        def flush(): Unit = {
-          if (pendingIns > 0) { ins.executeBatch(); pendingIns = 0 }
-          if (pendingDel > 0) { del.executeBatch(); pendingDel = 0 }
-          pendingGen = 0
-          conn.commit()
-        }
-        def bind(st: java.sql.PreparedStatement, idx: Array[Int],
-            row: org.apache.spark.sql.Row): Unit = {
-          var i = 0
-          while (i < idx.length) { st.setObject(i + 1, row.get(idx(i))); i += 1 }
-        }
-        try {
-          rows.foreach { row =>
-            val flag = row.getString(flagIdx)
-            flag match {
-              case "deleted" =>
-                bind(del, pkIdx, row); del.addBatch(); pendingDel += 1
-                deleted.add(1)
-              case _ =>
-                if (generic) { // portable UPDATE-then-INSERT
-                  // statements run row-at-a-time (the portable-dialect
-                  // price) but COMMIT at the batch cadence — per-row
-                  // commits cost more than the statements themselves on
-                  // an embedded/remote target (the reference commits
-                  // every 100 rows for the same reason, pl:3693)
-                  val n = upd.map { u =>
-                    bind(u, updIdx, row); u.executeUpdate()
-                  }.getOrElse(0)
-                  if (n == 0) { bind(ins, allIdx, row); ins.executeUpdate() }
-                  pendingGen += 1
-                } else { // new | changed → batched PG upsert
-                  bind(ins, allIdx, row); ins.addBatch(); pendingIns += 1
-                }
-                if (flag == "new") inserted.add(1) else updated.add(1)
-            }
-            if (pendingIns >= target.batchSize ||
-                pendingDel >= target.batchSize ||
-                pendingGen >= target.batchSize) flush()
-          }
-          flush()
-        } finally {
-          ins.close(); upd.foreach(_.close()); del.close(); conn.close()
-        }
-      }
-    SyncReport(inserted.sum, updated.sum, deleted.sum)
+    val n = JdbcSink.run(diffed.filter(col(FlagCol) =!= "identical"),
+      syncPlan(diffed, pkCols, target))
+    SyncReport(n.inserted, n.updated, n.deleted, n.rejected)
+  }
+
+  /** The apply's statements, resolved against the target. */
+  private[operators] def syncPlan(diffed: DataFrame, pkCols: Seq[String],
+      target: SyncTarget): JdbcSink.Plan = {
+    val valueCols = diffed.columns.filterNot(c => pkCols.contains(c) || c == FlagCol).toSeq
+    val all = pkCols ++ valueCols
+    val conn = JdbcSink.Conn(target.url, target.user, target.password)
+    val t = JdbcSink.target(conn, target.table, diffed, all, truncate = false)
+    val where = t.q(pkCols).map(_ + " = ?").mkString(" AND ")
+    // a key-only table sets its key to itself: 1 if present, 0 if not
+    val set = if (valueCols.isEmpty) pkCols else valueCols
+    val pg = target.dialect == "postgresql"
+    JdbcSink.Plan(conn, target.batchSize, ignoreErrors = false,
+      flag = diffed.schema.fieldIndex(FlagCol),
+      insert = if (!pg) t.insert(all)
+        else t.stmt(upsertSql(target.table, t.q(pkCols), t.q(valueCols)), all),
+      update = if (pg) None else Some(t.stmt(s"UPDATE ${target.table} SET " +
+        t.q(set).map(_ + " = ?").mkString(", ") + s" WHERE $where", set ++ pkCols)),
+      delete = Some(t.stmt(s"DELETE FROM ${target.table} WHERE $where", pkCols)))
   }
 
   /** PostgreSQL upsert statement for the apply step. */

@@ -22,18 +22,6 @@ object Writers {
       partitionCols: Seq[String]): Unit =
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 
-  /** Bucketed + sorted table write (requires saveAsTable — bucket
-    * metadata lives in the catalog). Both sides of a recurring
-    * join/diff written with the same bucketing never shuffle again.
-    */
-  def writeBucketed(df: DataFrame, table: String, buckets: Int,
-      keyCols: Seq[String]): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, keyCols.head, keyCols.tail: _*)
-      .sortBy(keyCols.head, keyCols.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
-
   /** Z-order-clustered write: range-partition by the Morton value of
     * `cols`' low `bits` bits, sort within partitions, write — every
     * file covers a tight hypercube of the clustered dimensions, so

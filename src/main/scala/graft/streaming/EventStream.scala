@@ -1381,9 +1381,11 @@ object EventStream {
       .otherwise(lit("changed"))
 
   /** Continuous sync sink: each micro-batch applies idempotent
-    * upserts AND deletes via the DiffSync JDBC writer — `foreachBatch`
+    * upserts AND deletes through `DiffSync.applyToJdbc` — `foreachBatch`
     * + upsert is the exactly-once-effective pattern (batch-id dedup
-    * left to the target table's PK).
+    * left to the target table's PK). Every upsert row is flagged
+    * `changed`: a batched UPDATE, then an INSERT where it matched no row
+    * (the PostgreSQL upsert in that dialect).
     *
     * `opCol` names the stream's CDC operation column (Debezium-style
     * op codes or plain "delete"/"upsert" strings); rows flagged as
@@ -1395,7 +1397,8 @@ object EventStream {
     * A CDC micro-batch can carry the same key more than once, so each
     * batch is repartitioned by PK before the apply: all rows of a key
     * land in one partition, so no two connections write the same key.
-    * The apply's [[graft.operators.DiffSync.SyncReport]] is not kept.
+    * Within a writer batch, upserts run before deletes. The apply's
+    * [[graft.operators.DiffSync.SyncReport]] is not kept.
     */
   /** `trigger` defaults to the production 10-second cadence; tests
     * and gates pass `Trigger.AvailableNow()` to drain a bounded

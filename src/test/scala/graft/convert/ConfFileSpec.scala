@@ -96,6 +96,43 @@ class ConfFileSpec extends AnyFunSuite {
     assert(write.url.startsWith("jdbc:postgresql://pg.example:5433/tgtdb"))
   }
 
+  test("-sforce_ssl / -pforce_ssl follow their value, not their presence") {
+    val ends = Seq("-sd", "src", "-pd", "tgt")
+    val cat = new graft.parser.TsqlParser(Config()).parse(Seq(
+      "CREATE TABLE [dbo].[T](", "\t[id] [int] NOT NULL", ") ON [PRIMARY]", "GO"))
+    /** (SQL Server URL, PostgreSQL URL, SQL Server Kettle block,
+      * PostgreSQL Kettle block) each forcing SSL. */
+    def ssl(job: ConfFile.Job) = {
+      val ktr = new graft.emit.KettleEmitter(job.config, job.sqlServer,
+        job.postgres).emit(cat, "/tmp/kettle").values.mkString
+      (job.sqlServerUrl.get.contains("encrypt=true"),
+        job.postgresUrl.get.contains("sslmode=require"),
+        ktr.contains("EXTRA_OPTION_MSSQL.ssl"),
+        ktr.contains("EXTRA_OPTION_POSTGRESQL.ssl"))
+    }
+    def cli(args: String*) = ssl(graft.tools.Main.buildJob(ends ++ args))
+    def conf(v: String) = ssl(ConfFile.toJob(ConfFile.merge(
+      ConfFile.parseCli(ends) ++ ConfFile.parseConfLines(Seq(
+        s"sql server force ssl = $v", s"postgresql force ssl = $v")))))
+    val on = (true, true, true, true)
+    val off = (false, false, false, false)
+    assert(cli("-sforce_ssl=0", "-pforce_ssl=0") === off)
+    assert(cli("-sforce_ssl=1", "-pforce_ssl=1") === on)
+    assert(cli("-sforce_ssl", "-pforce_ssl") === on)   // bare switch: on
+    assert(cli() === off)
+    assert(cli("-sforce_ssl") === ((true, false, true, false)))
+    assert(conf("0") === off)
+    assert(conf("1") === on)
+  }
+
+  test("-ignore_errors reaches the copy sink spec") {
+    def ignore(args: String*) = graft.operators.JdbcSink.specFromJob(
+      graft.tools.Main.buildJob(Seq("-pd", "tgt") ++ args), "t").ignoreErrors
+    assert(ignore("-ignore_errors"))
+    assert(!ignore("-ignore_errors=0"))
+    assert(!ignore())
+  }
+
   test("buildJob is embeddable: -h does not exit the JVM") {
     // -h parses as a plain boolean flag; only Main.main() exits on it
     val job = graft.tools.Main.buildJob(Seq("-h", "-f", "/d.sql"))

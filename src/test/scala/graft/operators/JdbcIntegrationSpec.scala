@@ -3,7 +3,7 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageSubmitted}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.sources.Tables
@@ -87,17 +87,40 @@ class JdbcIntegrationSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("JdbcSink.write appends batched rows into a real JDBC table") {
-    withConn(_.createStatement().executeUpdate(
-      "CREATE TABLE copy_t (id BIGINT NOT NULL PRIMARY KEY, v DOUBLE)"))
+    // the same lower-case DataFrame columns land in a target created
+    // with unquoted (Derby upper-cases them) and with quoted lower-case
+    // identifiers; NULLs bind with the target column's type
+    withConn { c =>
+      c.createStatement().executeUpdate("CREATE TABLE copy_t (id BIGINT " +
+        "NOT NULL PRIMARY KEY, v DOUBLE, b VARCHAR(8) FOR BIT DATA, " +
+        "d DECIMAL(12, 2), ts TIMESTAMP)")
+      c.createStatement().executeUpdate("CREATE TABLE \"copy_q\" (\"id\" " +
+        "BIGINT NOT NULL, \"v\" DOUBLE, \"b\" VARCHAR(8) FOR BIT DATA, " +
+        "\"d\" DECIMAL(12, 2), \"ts\" TIMESTAMP)")
+    }
     import spark.implicits._
-    val df = (1L to 100L).map(i => (i, i * 1.5)).toDF("id", "v")
-    JdbcSink.write(df, JdbcSink.Spec(url, "copy_t", "", "",
-      numPartitions = 2, truncate = false, relaxDurability = false,
-      rewriteBatchedInserts = false))
-    val back = spark.read.format("jdbc")
-      .option("url", url).option("dbtable", "copy_t").load()
-    assert(back.count() === 100)
-    assert(back.agg(sum("v")).head.getDouble(0) === (1 to 100).map(_ * 1.5).sum)
+    val df = (1L to 100L).map { i =>
+      (i, i * 1.5, if (i % 3 == 0) null else Array[Byte](i.toByte, 7),
+        BigDecimal(i) / 4, if (i % 5 == 0) null
+        else java.sql.Timestamp.valueOf(f"2024-01-01 00:00:${i % 60}%02d"))
+    }.toDF("id", "v", "b", "d", "ts")
+    for ((table, q) <- Seq("copy_t" -> "", "\"copy_q\"" -> "\"")) {
+      val report = JdbcSink.write(df, JdbcSink.Spec(url, table, "", "",
+        numPartitions = 2, truncate = false, relaxDurability = false,
+        rewriteBatchedInserts = false))
+      assert((report.rows, report.rejected) === (100L, 0L))
+      val back = withConn { c =>
+        val rs = c.createStatement().executeQuery(s"SELECT COUNT(*), " +
+          s"SUM(${q}v$q), COUNT(${q}b$q), SUM(${q}d$q), COUNT(${q}ts$q), " +
+          s"MAX(${q}ts$q), SUM(LENGTH(${q}b$q)) FROM $table")
+        rs.next()
+        (rs.getLong(1), rs.getDouble(2), rs.getLong(3), rs.getBigDecimal(4),
+          rs.getLong(5), rs.getTimestamp(6).toString, rs.getLong(7))
+      }
+      assert(back === ((100L, (1 to 100).map(_ * 1.5).sum, 67L,
+        new java.math.BigDecimal("1262.50"), 80L, "2024-01-01 00:00:59.0",
+        134L)))
+    }
   }
 
   test("C16: applyToJdbc syncs a real target to the source state") {
@@ -178,6 +201,47 @@ class JdbcIntegrationSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("a partition re-run after a mid-write failure applies each row once") {
+    // local mode does not retry tasks, so the partition writer runs
+    // twice by hand: the first attempt's rows throw after two batches
+    def failingAfter(rows: Seq[Row], n: Int): Iterator[Row] =
+      rows.iterator.zipWithIndex.map { case (r, i) =>
+        if (i == n) throw new IllegalStateException("injected") else r
+      }
+    import spark.implicits._
+    // copy into a PK-less load target: commits once per partition, so
+    // the failed attempt leaves nothing to duplicate
+    withConn(_.createStatement().executeUpdate(
+      "CREATE TABLE retry_copy (id BIGINT, v DOUBLE)"))
+    val src = (1L to 25L).map(i => (i, i.toDouble)).toDF("id", "v")
+    val conn = JdbcSink.Conn(url, "", "")
+    val copy = JdbcSink.Plan(conn, batchSize = 5, ignoreErrors = false,
+      flag = -1, insert = JdbcSink.target(conn, "retry_copy", src,
+        src.columns.toSeq, truncate = false).insert(src.columns.toSeq))
+    val rows = src.collect().toSeq
+    intercept[IllegalStateException](
+      JdbcSink.writePartition(copy, failingAfter(rows, 10)))
+    assert(JdbcSink.writePartition(copy, rows.iterator).inserted === 25L)
+    assert(rowsOf("retry_copy") === (1L to 25L).map(i => (i, i.toDouble)))
+    // sync: commits per batch; the re-run replays the committed rows
+    // (a `new` row as UPDATE-then-INSERT) and ends where one apply does
+    seedSyncPair("retry_src", "retry_tgt")
+    val diffed = DiffSync.diff(readSide("retry_src"), readSide("retry_tgt"),
+      Seq("id"))
+    // every batch mixes new, changed and deleted rows
+    val applied = diffed.filter(col(DiffSync.FlagCol) =!= "identical")
+      .collect().toSeq.sortBy(r => (r.getLong(0) % 3, r.getLong(0)))
+    val sync = DiffSync.syncPlan(diffed, Seq("id"), DiffSync.SyncTarget(
+      url, "retry_tgt", "", "", batchSize = 7, dialect = "generic"))
+    intercept[IllegalStateException](
+      JdbcSink.writePartition(sync, failingAfter(applied, 14)))
+    assert(rowsOf("retry_tgt") !== rowsOf("retry_src"))
+    val tally = JdbcSink.writePartition(sync, applied.iterator)
+    assert((tally.inserted, tally.updated, tally.deleted, tally.rejected) ===
+      ((10L, 10L, 10L, 0L)))
+    assert(rowsOf("retry_tgt") === rowsOf("retry_src"))
+  }
+
   test("plannedRead: LOB+int-PK table reads range-partitioned with -pi slices") {
     withConn { c =>
       c.createStatement().executeUpdate(
@@ -215,7 +279,7 @@ class JdbcIntegrationSpec extends AnyFunSuite with SparkTestBase {
     assert(one.rdd.getNumPartitions === 1)
   }
 
-  test("P12: writeJdbcIgnoringErrors survives constraint-violating rows") {
+  test("P12: JdbcSink.write with ignoreErrors rejects only the bad row") {
     withConn(_.createStatement().executeUpdate(
       "CREATE TABLE err_t (id BIGINT NOT NULL PRIMARY KEY, v DOUBLE)"))
     withConn { c =>
@@ -225,11 +289,12 @@ class JdbcIntegrationSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val df = Seq((1L, 1.0), (5L, 99.0), (6L, 6.0)).toDF("id", "v")
       .coalesce(1)
-    val rejected = JdbcSink.writeJdbcIgnoringErrors(df,
-      JdbcSink.Spec(url, "err_t", "", "", relaxDurability = false,
-        rewriteBatchedInserts = false, batchSize = 10),
-      "INSERT INTO err_t (id, v) VALUES (?, ?)")
-    assert(rejected === 1L) // only the duplicate key row
+    val spec = JdbcSink.Spec(url, "err_t", "", "", numPartitions = 1,
+      truncate = false, relaxDurability = false,
+      rewriteBatchedInserts = false, batchSize = 10)
+    val report = JdbcSink.write(df, spec.copy(ignoreErrors = true))
+    assert(report.rejected === 1L) // only the duplicate key row
+    assert(report.rows === 2L)
     val n = withConn { c =>
       val rs = c.createStatement().executeQuery("SELECT COUNT(*) FROM err_t")
       rs.next(); rs.getLong(1)

@@ -5,21 +5,6 @@ import scala.collection.mutable
 
 class JdbcSinkSpec extends AnyFunSuite {
 
-  test("createTableColumnTypes carries converted PG types to the sink") {
-    val ddl =
-      """CREATE TABLE [dbo].[T](
-        |	[id] [bigint] NOT NULL,
-        |	[guid] [uniqueidentifier] NOT NULL,
-        |	[name] [nvarchar](50) NULL,
-        |	[price] [numeric](9, 0) NULL
-        |) ON [PRIMARY]
-        |GO""".stripMargin
-    val conf = graft.convert.Config(convertNumericToInt = true)
-    val cat = new graft.parser.TsqlParser(conf).parse(ddl.split("\n").toSeq)
-    val types = JdbcSink.createTableColumnTypes(cat.table("public", "T").get)
-    assert(types === "id bigint, guid uuid, name varchar(50), price integer")
-  }
-
   test("partitionHint: single integral PK + lobs/conf opt-in") {
     val ddl =
       """CREATE TABLE [dbo].[Big](
@@ -64,21 +49,27 @@ class JdbcSinkSpec extends AnyFunSuite {
   }
 
   test("jdbc options carry the tuning surface") {
-    val opts = JdbcSink.jdbcOptions(JdbcSink.Spec(
-      url = "jdbc:postgresql://h/db", table = "t", user = "u",
-      password = "p"))
-    assert(opts("url").contains("reWriteBatchedInserts=true"))
-    assert(opts("numPartitions") === "8")   // -po default (pl:166)
-    assert(opts("truncate") === "true")
-    assert(opts("sessionInitStatement").contains("synchronous_commit"))
+    val spec = JdbcSink.Spec(url = "jdbc:postgresql://h/db", table = "t",
+      user = "u", password = "p")
+    assert(spec.numPartitions === 8)   // -po default (pl:166)
+    assert(spec.truncate && !spec.ignoreErrors)
+    val conn = JdbcSink.connOf(spec)
+    assert(conn.url === "jdbc:postgresql://h/db?reWriteBatchedInserts=true")
+    assert(JdbcSink.connOf(spec.copy(url = "jdbc:postgresql://h/db?ssl=true"))
+      .url === "jdbc:postgresql://h/db?ssl=true&reWriteBatchedInserts=true")
+    assert(conn.init === Some("SET synchronous_commit TO off"))
+    assert((conn.user, conn.password) === ("u", "p"))
   }
 
   test("non-postgres url is not rewritten; durability opt-out") {
-    val opts = JdbcSink.jdbcOptions(JdbcSink.Spec(
-      url = "jdbc:sqlserver://h", table = "t", user = "u", password = "p",
-      relaxDurability = false))
-    assert(!opts("url").contains("reWriteBatchedInserts"))
-    assert(!opts.contains("sessionInitStatement"))
+    val sqlServer = JdbcSink.connOf(JdbcSink.Spec(
+      url = "jdbc:sqlserver://h", table = "t", user = "u", password = "p"))
+    // synchronous_commit is PostgreSQL's: other targets never get it
+    assert(sqlServer.url === "jdbc:sqlserver://h" && sqlServer.init === None)
+    val pg = JdbcSink.Spec(url = "jdbc:postgresql://h/db", table = "t",
+      user = "u", password = "p", relaxDurability = false,
+      rewriteBatchedInserts = false)
+    assert(JdbcSink.connOf(pg) === JdbcSink.Conn("jdbc:postgresql://h/db", "u", "p"))
   }
 
   test("P12: batch failure degrades to per-row replay, counts rejects") {
@@ -95,6 +86,24 @@ class JdbcSinkSpec extends AnyFunSuite {
     // replayed row-at-a-time, only 5 rejected
     assert(written.toSeq === Seq(1, 2, 3, 4, 6))
     assert(rejected === 1L)
+  }
+
+  test("P12: a row failure is fatal without ignoreErrors, a batch failure without replay") {
+    val poison = (batch: Seq[Int]) =>
+      if (batch.contains(5)) throw new RuntimeException("batch poison")
+    val replayed = mutable.Buffer[Int]()
+    intercept[RuntimeException] {
+      JdbcSink.writeIgnoringErrors(Iterator(1, 2, 3, 4, 5, 6), batchSize = 3,
+        ignoreErrors = false)(poison) { row =>
+        if (row == 5) throw new RuntimeException("row poison")
+        replayed += row
+      }
+    }
+    assert(replayed.toSeq === Seq(4)) // the replay stops at the bad row
+    intercept[RuntimeException] {
+      JdbcSink.writeIgnoringErrors(Iterator(1, 2, 3, 4, 5, 6), batchSize = 3,
+        replay = false)(poison)(row => fail(s"row $row replayed"))
+    }
   }
 
   test("P12: all-good input never touches the row path") {
