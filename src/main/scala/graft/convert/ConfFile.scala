@@ -68,18 +68,22 @@ object ConfFile {
     "stringtype_unspecified", "skip_citext_length_check",
     "use_identity_column", "h")
 
+  private val kvRe = """^(.*?)=(.*)$""".r
+  private val commentRe = "#.*".r
+  private val spacedEqualsRe = """\s+=\s+""".r
+  private val trailingSpaceRe = """\s+$""".r
+
   /** Parse conf-file lines: strip #-comments, tolerate whitespace
     * around `=`, fail on unknown keys or non key=value lines
     * (pl:128–150).
     */
   def parseConfLines(lines: Seq[String]): Seq[(String, String)] = {
-    val kv = """^(.*?)=(.*)$""".r
     lines.flatMap { raw =>
-      val line = raw.replaceAll("#.*", "")
-        .replaceAll("\\s+=\\s+", "=").replaceAll("\\s+$", "")
+      val line = trailingSpaceRe.replaceAllIn(spacedEqualsRe.replaceAllIn(
+        commentRe.replaceAllIn(raw, ""), "="), "")
       if (line.isEmpty) None
       else line match {
-        case kv(k, v) =>
+        case kvRe(k, v) =>
           keyToParam.get(k) match {
             case Some(p) => Some(p -> v)
             case None => throw ConfException(
@@ -138,10 +142,12 @@ object ConfFile {
       case _ => false
     }
 
+  private val relabelArrowRe = "=>".r
+
   /** `relabel schemas` value: `src=>dst;src2=>dst2` (pl:716–751). */
   def parseRelabel(v: String): Map[String, String] =
     v.split(";").iterator.map(_.trim).filter(_.nonEmpty).map { pair =>
-      pair.split("=>") match {
+      relabelArrowRe.split(pair) match {
         case Array(s, d) => s.trim -> d.trim
         case _ => throw ConfException(s"Cannot parse relabel schemas: $pair")
       }

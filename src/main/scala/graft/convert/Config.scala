@@ -51,13 +51,23 @@ final case class Config(
     * otherwise a comma/semicolon/space separated list of bare or
     * schema-qualified table names, case-insensitive.
     */
-  def usePkAllowed(schema: String, table: String): Boolean = {
+  def usePkAllowed(schema: String, table: String): Boolean =
+    usePkList.forall { l =>
+      val t = table.toLowerCase
+      l.contains(t) || l.contains(s"${schema.toLowerCase}.$t")
+    }
+
+  /** The `usePkIfPossible` list, split once; None allows every table. */
+  @transient private lazy val usePkList: Option[Set[String]] = {
     val allow = usePkIfPossible.trim
-    allow == "1" || allow == "*" || allow
-      .split("[,;\\s]+").map(_.trim.toLowerCase).filter(_.nonEmpty)
-      .exists(e => e == table.toLowerCase ||
-        e == s"${schema.toLowerCase}.${table.toLowerCase}")
+    if (allow == "1" || allow == "*") None
+    else Some(Config.listSepRe.split(allow).map(_.trim.toLowerCase)
+      .filter(_.nonEmpty).toSet)
   }
+}
+
+object Config {
+  private val listSepRe = "[,;\\s]+".r
 }
 
 sealed trait IdentifierCase

@@ -51,10 +51,12 @@ object ExprRewriter {
       rename: String => String, dboTarget: String): String = {
     val (masked, lits) = maskLiterals(body)
     var s = rewriteMasked(masked, dialect, rename)
-    s = s.replaceAll("(?i)\\bdbo\\.",
+    s = dboRe.replaceAllIn(s,
       java.util.regex.Matcher.quoteReplacement(dboTarget + "."))
     rewriteConcat(unmask(s, lits))
   }
+
+  private val dboRe = """(?i)\bdbo\.""".r
 
   private def rewriteMasked(masked: String, dialect: Dialect,
       rename: String => String): String =
@@ -78,8 +80,10 @@ object ExprRewriter {
     (masked, lits.result())
   }
 
+  private val maskRe = "\uE000(\\d+)\uE001".r
+
   private[convert] def unmask(s: String, lits: Vector[String]): String =
-    """\uE000(\d+)\uE001""".r.replaceAllIn(s, m =>
+    maskRe.replaceAllIn(s, m =>
       java.util.regex.Matcher.quoteReplacement(lits(m.group(1).toInt)))
 
   // keywords/type names a bare-identifier pass must leave alone; the
@@ -196,10 +200,9 @@ object ExprRewriter {
     * `varchar(15)`: PostgreSQL has no nvarchar and the real-PG replay
     * rejects it. Unknown names pass through untouched.
     */
-  private[convert] def mapCastType(t: String, dialect: Dialect): String = {
-    val m = """^\s*([A-Za-z_][\w]*)\s*(?:\(\s*([^)]*?)\s*\))?\s*$""".r
+  private[convert] def mapCastType(t: String, dialect: Dialect): String =
     t match {
-      case m(name, args) =>
+      case castTypeRe(name, args) =>
         val a = Option(args).map(_.trim).filter(_.nonEmpty)
         def withArgs(base: String) = a match {
           case Some(x) if !x.equalsIgnoreCase("max") => s"$base($x)"
@@ -228,14 +231,16 @@ object ExprRewriter {
         }
       case _ => t.trim
     }
-  }
+
+  private val castTypeRe =
+    """^\s*([A-Za-z_][\w]*)\s*(?:\(\s*([^)]*?)\s*\))?\s*$""".r
 
   /** `CAST(x AS <tsql-type>)` → same cast with the mapped type. The
     * expression side was already rewritten by the rewriteCall
     * recursion; only the type token after the LAST top-level AS maps.
     */
   private def rewriteCastTypes(s: String, dialect: Dialect): String =
-    rewriteCall(s, "cast", dialect) {
+    rewriteCall(s, castCallRe, dialect) {
       case Seq(one) =>
         splitLastTopLevelAs(one) match {
           case Some((e, t)) => s"CAST($e AS ${mapCastType(t, dialect)})"
@@ -272,14 +277,14 @@ object ExprRewriter {
     * accepts the POSITION(x IN y) form.
     */
   private def rewriteCharindex(s: String, dialect: Dialect): String =
-    rewriteCall(s, "charindex", dialect) {
+    rewriteCall(s, charindexCallRe, dialect) {
       case Seq(sub, str) => s"POSITION($sub IN $str)"
       case args => s"CHARINDEX(${args.mkString(", ")})" // 3-arg: unsupported
     }
 
   /** DATEPART(part, d) → date_part('part', d) (pl:595). */
   private def rewriteDatepart(s: String, dialect: Dialect): String =
-    rewriteCall(s, "datepart", dialect) {
+    rewriteCall(s, datepartCallRe, dialect) {
       case Seq(part, d) => s"date_part('${part.trim.toLowerCase}', $d)"
       case args => s"DATEPART(${args.mkString(", ")})"
     }
@@ -288,7 +293,7 @@ object ExprRewriter {
     * Spark: accepts the same arithmetic with INTERVAL literals.
     */
   private def rewriteDateadd(s: String, dialect: Dialect): String =
-    rewriteCall(s, "dateadd", dialect) {
+    rewriteCall(s, dateaddCallRe, dialect) {
       case Seq(unit, n, d) =>
         val u = unit.trim.toLowerCase match {
           case "dd" | "d" => "day"
@@ -308,19 +313,26 @@ object ExprRewriter {
     * the T-SQL style argument is dropped.
     */
   private def rewriteConvert(s: String, dialect: Dialect): String =
-    rewriteCall(s, "convert", dialect) {
+    rewriteCall(s, convertCallRe, dialect) {
       case Seq(tpe, x) => s"CAST($x AS ${mapCastType(tpe, dialect)})"
       case Seq(tpe, x, _) => s"CAST($x AS ${mapCastType(tpe, dialect)})"
       case args => s"CONVERT(${args.mkString(", ")})"
     }
 
-  /** Generic innermost-out rewrite of `fn(args…)` with balanced-paren,
-    * quote-aware argument splitting — the structural improvement over the
-    * reference's flat regexes (which break on nested calls).
+  // `fn(` call heads, for rewriteCall
+  private val castCallRe = """(?i)\bcast\s*\(""".r
+  private val charindexCallRe = """(?i)\bcharindex\s*\(""".r
+  private val datepartCallRe = """(?i)\bdatepart\s*\(""".r
+  private val dateaddCallRe = """(?i)\bdateadd\s*\(""".r
+  private val convertCallRe = """(?i)\bconvert\s*\(""".r
+
+  /** Generic innermost-out rewrite of `fn(args…)` (`re` matches the call
+    * head) with balanced-paren, quote-aware argument splitting — the
+    * structural improvement over the reference's flat regexes (which
+    * break on nested calls).
     */
-  private def rewriteCall(input: String, fn: String, dialect: Dialect)(
-      f: Seq[String] => String): String = {
-    val re = s"(?i)\\b$fn\\s*\\(".r
+  private def rewriteCall(input: String, re: scala.util.matching.Regex,
+      dialect: Dialect)(f: Seq[String] => String): String = {
     var s = input
     // Resume each search AFTER the previous replacement: a fallback branch
     // that re-emits the same function name (legal 3-arg CHARINDEX, odd-arity
@@ -392,14 +404,17 @@ object ExprRewriter {
     * is a quoted literal or the expression context is known textual; we
     * take the same literal-driven heuristic.
     */
+  private val litPlusRe = """('(?:[^']|'')*')\s*\+""".r
+  private val plusLitRe = """\+\s*('(?:[^']|'')*')""".r
+
   def rewriteConcat(s: String): String = {
     // a + 'lit'  /  'lit' + a  → ||
     var out = s
     var prev = ""
     while (prev != out) {
       prev = out
-      out = out.replaceAll("""('(?:[^']|'')*')\s*\+""", "$1 ||")
-      out = out.replaceAll("""\+\s*('(?:[^']|'')*')""", "|| $1")
+      out = litPlusRe.replaceAllIn(out, "$1 ||")
+      out = plusLitRe.replaceAllIn(out, "|| $1")
     }
     // ident || b + c chains where left side already became || keep + for
     // numerics — matches the reference's conservative behavior.

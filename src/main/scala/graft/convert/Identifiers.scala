@@ -15,9 +15,11 @@ object Identifiers {
 
   /** camelCase → snake_case (pl:486–493). */
   def camelToSnake(s: String): String =
-    s.replaceAll("([a-z0-9])([A-Z])", "$1_$2")
-      .replaceAll("([A-Z]+)([A-Z][a-z])", "$1_$2")
+    upperRunRe.replaceAllIn(lowerUpperRe.replaceAllIn(s, "$1_$2"), "$1_$2")
       .toLowerCase
+
+  private val lowerUpperRe = "([a-z0-9])([A-Z])".r
+  private val upperRunRe = "([A-Z]+)([A-Z][a-z])".r
 
   /** Apply the configured identifier policy (pl:526–541). */
   def rename(s: String, conf: Config): String = conf.identifierCase match {

@@ -150,8 +150,6 @@ object TypeMapper {
       while (s.startsWith("(") && s.endsWith(")")) s = s.substring(1, s.length - 1).trim
       s
     }
-    val numRe = """^-?\d+(\.\d+)?$""".r
-    val strRe = """^N?'(.*)'$""".r
     unparen match {
       case _ if isBit && (unparen == "0" || unparen == "1") =>
         (if (unparen == "1") "true" else "false", false)
@@ -161,4 +159,7 @@ object TypeMapper {
       case expr => (ExprRewriter.rewrite(expr), true) // expression → unsure
     }
   }
+
+  private val numRe = """^-?\d+(\.\d+)?$""".r
+  private val strRe = """^N?'(.*)'$""".r
 }

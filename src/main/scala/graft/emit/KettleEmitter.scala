@@ -36,10 +36,17 @@ import graft.convert.{Config, Identifiers}
   *  - jobs: START → SQL SCRIPT START (CREATE CAST statements + DISABLE
   *    TRIGGER ALL per table) → alphabetical TRANS entries → SQL SCRIPT
   *    END (reverse) (pl:1176–1352).
+  *
+  * Template contract: every XML fragment is a `tpl"""…"""` template.
+  * Its literal text loses its `|` margin once per template (memoized in
+  * the companion); interpolated values (names, SQL, connection
+  * settings) are never margin-stripped and reach the file verbatim.
+  * The connection blocks are built once per emitter.
   */
 final class KettleEmitter(conf: Config,
     sqlServer: Map[String, String] = Map.empty,
     postgres: Map[String, String] = Map.empty) {
+  import KettleEmitter._
 
   private val sqlConnName = "__sqlserver_db__"
   private val pgConnName = "__postgres_db__"
@@ -162,7 +169,7 @@ final class KettleEmitter(conf: Config,
   private def connection(name: String, dbType: String, host: String,
       db: String, port: String, user: String, pass: String,
       attrs: String): String =
-    s"""  <connection>
+    tpl"""  <connection>
        |    <name>$name</name>
        |    <server>${esc(host)}</server>
        |    <type>$dbType</type>
@@ -177,14 +184,14 @@ final class KettleEmitter(conf: Config,
        |    <attributes>
        |$attrs
        |    </attributes>
-       |  </connection>""".stripMargin
+       |  </connection>"""
 
-  private def pgConnection: String =
+  private val pgConnection: String =
     connection(pgConnName, "POSTGRESQL", postgres.getOrElse("ph", ""),
       postgres.getOrElse("pd", ""), postgres.getOrElse("pp", ""),
       postgres.getOrElse("pu", ""), postgres.getOrElse("pw", ""), pgAttrs)
 
-  private def sqlServerConnection: String =
+  private val sqlServerConnection: String =
     connection(sqlConnName, "MSSQL", sqlServer.getOrElse("sh", ""),
       sqlServer.getOrElse("sd", ""), sqlServer.getOrElse("sp", ""),
       sqlServer.getOrElse("su", ""), sqlServer.getOrElse("sw", ""),
@@ -194,7 +201,7 @@ final class KettleEmitter(conf: Config,
 
   private def stepHeader(name: String, stepType: String,
       copies: String): String =
-    s"""    <name>$name</name>
+    tpl"""    <name>$name</name>
        |    <type>$stepType</type>
        |    <description/>
        |    <distribute>Y</distribute>
@@ -202,13 +209,13 @@ final class KettleEmitter(conf: Config,
        |    <partitioning>
        |      <method>none</method>
        |      <schema_name/>
-       |    </partitioning>""".stripMargin
+       |    </partitioning>"""
 
   private def stepFooter(x: Int, y: Int): String =
-    s"""    <cluster_schema/>
+    tpl"""    <cluster_schema/>
        |    <remotesteps><input></input><output></output></remotesteps>
        |    <GUI><xloc>$x</xloc><yloc>$y</yloc><draw>Y</draw></GUI>
-       |    </step>""".stripMargin
+       |    </step>"""
 
   private def step(name: String, stepType: String, copies: String,
       body: String, x: Int, y: Int): String =
@@ -216,7 +223,7 @@ final class KettleEmitter(conf: Config,
 
   private def execSqlStep(sql: String): String =
     step("Execute SQL script", "ExecSQL", "1",
-      s"""    <connection>$pgConnName</connection>
+      tpl"""    <connection>$pgConnName</connection>
          |    <execute_each_row>N</execute_each_row>
          |    <single_statement>N</single_statement>
          |    <replace_variables>N</replace_variables>
@@ -228,27 +235,27 @@ final class KettleEmitter(conf: Config,
          |    <delete_field/>
          |    <read_field/>
          |    <arguments>
-         |    </arguments>""".stripMargin, 64, 160)
+         |    </arguments>""", 64, 160)
 
   private def blockStep: String =
     step("Block this step until steps finish", "BlockUntilStepsFinish", "1",
-      s"""    <steps>
+      tpl"""    <steps>
          |      <step>
          |        <name>Execute SQL script</name>
          |        <CopyNr>0</CopyNr>
          |      </step>
-         |    </steps>""".stripMargin, 123, 160)
+         |    </steps>""", 123, 160)
 
   private def tableInputStep(name: String, conn: String, sql: String,
       copies: String, variablesActive: Boolean, x: Int, y: Int): String =
     step(name, "TableInput", copies,
-      s"""    <connection>$conn</connection>
+      tpl"""    <connection>$conn</connection>
          |    <sql>${esc(sql)}</sql>
          |    <limit>0</limit>
          |    <lookup/>
          |    <execute_each_row>N</execute_each_row>
          |    <variables_active>${if (variablesActive) "Y" else "N"}</variables_active>
-         |    <lazy_conversion_active>N</lazy_conversion_active>""".stripMargin,
+         |    <lazy_conversion_active>N</lazy_conversion_active>""",
       x, y)
 
   /** NUL-byte scrub between input and output — same contract as the
@@ -257,52 +264,19 @@ final class KettleEmitter(conf: Config,
     * CopyPipeline.scrubNulBytes) but an original implementation.
     */
   private def nulScrubStep(copies: String, x: Int, y: Int): String = {
-    val source =
-      """import java.util.Arrays;
-        |
-        |private int[] stringFieldIdx;
-        |
-        |public boolean processRow(StepMetaInterface smi, StepDataInterface sdi)
-        |    throws KettleException {
-        |  Object[] row = getRow();
-        |  if (row == null) { setOutputDone(); return false; }
-        |  if (first) {
-        |    RowMetaInterface meta = getInputRowMeta();
-        |    int n = meta.size();
-        |    int[] tmp = new int[n];
-        |    int k = 0;
-        |    for (int i = 0; i < n; i++) {
-        |      if (meta.getValueMeta(i).getType() == ValueMetaInterface.TYPE_STRING) {
-        |        tmp[k++] = i;
-        |      }
-        |    }
-        |    stringFieldIdx = Arrays.copyOf(tmp, k);
-        |    first = false;
-        |  }
-        |  Object[] out = createOutputRow(row, data.outputRowMeta.size());
-        |  for (int j = 0; j < stringFieldIdx.length; j++) {
-        |    int i = stringFieldIdx[j];
-        |    Object v = out[i];
-        |    if (v instanceof String && ((String) v).indexOf('\0') >= 0) {
-        |      out[i] = ((String) v).replace("\0", "");
-        |    }
-        |  }
-        |  putRow(data.outputRowMeta, out);
-        |  return true;
-        |}""".stripMargin
     step("User Defined Java Class", "UserDefinedJavaClass", copies,
-      s"""    <definitions>
+      tpl"""    <definitions>
          |      <definition>
          |        <class_type>TRANSFORM_CLASS</class_type>
          |        <class_name>Processor</class_name>
-         |        <class_source><![CDATA[$source]]></class_source>
+         |        <class_source><![CDATA[$nulScrubSource]]></class_source>
          |      </definition>
          |    </definitions>
          |    <fields>
          |    </fields>
          |    <clear_result_fields>N</clear_result_fields>
          |    <info_steps></info_steps><target_steps></target_steps>
-         |    <usage_parameters></usage_parameters>""".stripMargin, x, y)
+         |    <usage_parameters></usage_parameters>""", x, y)
   }
 
   private def tableOutputStep(pgSchema: String, pgTable: String,
@@ -311,7 +285,7 @@ final class KettleEmitter(conf: Config,
     // batch mode cannot ignore errors (pl:1034–1037)
     val batch = if (conf.ignoreErrors) "N" else "Y"
     step("Table output", "TableOutput", copies,
-      s"""    <connection>$pgConnName</connection>
+      tpl"""    <connection>$pgConnName</connection>
          |    <schema>${esc(pgSchema)}</schema>
          |    <table>${esc(pgTable)}</table>
          |    <commit>100</commit>
@@ -329,7 +303,7 @@ final class KettleEmitter(conf: Config,
          |    <return_keys>N</return_keys>
          |    <return_field/>
          |    <fields>
-         |    </fields>""".stripMargin, 371, 158)
+         |    </fields>""", 371, 158)
   }
 
   private def sortRowsStep(name: String, keys: Seq[String], copies: String,
@@ -337,7 +311,7 @@ final class KettleEmitter(conf: Config,
     val fields = keys.map(k =>
       s"      <field>\n        <name>${esc(k)}</name>\n        <ascending>Y</ascending>\n        <case_sensitive>Y</case_sensitive>\n      </field>").mkString("\n")
     step(name, "SortRows", copies,
-      s"""    <directory>%%java.io.tmpdir%%</directory>
+      tpl"""    <directory>%%java.io.tmpdir%%</directory>
          |    <prefix>out</prefix>
          |    <sort_size>${conf.sortSize}</sort_size>
          |    <free_memory></free_memory>
@@ -346,7 +320,7 @@ final class KettleEmitter(conf: Config,
          |    <unique_rows>N</unique_rows>
          |    <fields>
          |$fields
-         |    </fields>""".stripMargin, x, y)
+         |    </fields>""", x, y)
   }
 
   private def sortedMergeStep(name: String, keys: Seq[String], x: Int,
@@ -364,7 +338,7 @@ final class KettleEmitter(conf: Config,
     val values = orderedCols(t)
       .map(c => s"      <value>${esc(c.name)}</value>").mkString("\n")
     step("Merge Rows (diff)", "MergeRows", "1",
-      s"""    <keys>
+      tpl"""    <keys>
          |$keys
          |    </keys>
          |    <values>
@@ -372,7 +346,7 @@ final class KettleEmitter(conf: Config,
          |    </values>
          |    <flag_field>__changed__</flag_field>
          |    <reference>$reference</reference>
-         |    <compare>$compare</compare>""".stripMargin, 506, 212)
+         |    <compare>$compare</compare>""", 506, 212)
   }
 
   private def syncAfterMergeStep(t: TableDef, pgSchema: String,
@@ -381,23 +355,23 @@ final class KettleEmitter(conf: Config,
     // stream field; values: PG column <- source stream field
     // (pl:1118–1149)
     val keys = t.pk.toSeq.flatMap(_.cols).map { k =>
-      s"""      <key>
+      tpl"""      <key>
          |        <name>${esc(k)}</name>
          |        <field>${esc(Identifiers.rename(k, conf))}</field>
          |        <condition>=</condition>
          |        <name2/>
-         |      </key>""".stripMargin
+         |      </key>"""
     }.mkString("\n")
     val values = orderedCols(t).map { c =>
-      s"""      <value>
+      tpl"""      <value>
          |        <name>${esc(Identifiers.rename(c.name, conf))}</name>
          |        <rename>${esc(c.name)}</rename>
          |        <update>Y</update>
-         |      </value>""".stripMargin
+         |      </value>"""
     }.mkString("\n")
     step("Synchronize after merge", "SynchronizeAfterMerge",
       conf.parallelismOut.toString,
-      s"""    <connection>$pgConnName</connection>
+      tpl"""    <connection>$pgConnName</connection>
          |    <commit>100</commit>
          |    <tablename_in_field>N</tablename_in_field>
          |    <tablename_field/>
@@ -412,13 +386,13 @@ final class KettleEmitter(conf: Config,
          |      <table>${esc(pgTable)}</table>
          |$keys
          |$values
-         |    </lookup>""".stripMargin, 700, 212)
+         |    </lookup>""", 700, 212)
   }
 
   // --- transformation documents ---------------------------------------
 
   private def transInfo(name: String): String =
-    s"""  <info>
+    tpl"""  <info>
        |    <name>${esc(name)}</name>
        |    <description/>
        |    <extended_description/>
@@ -449,14 +423,14 @@ final class KettleEmitter(conf: Config,
        |    </clusterschemas>
        |  </info>
        |  <notepads>
-       |  </notepads>""".stripMargin
+       |  </notepads>"""
 
   private def hop(from: String, to: String): String =
     s"    <hop><from>$from</from><to>$to</to><enabled>Y</enabled></hop>"
 
   private def transformation(name: String, connections: Seq[String],
       hops: Seq[String], steps: Seq[String]): String =
-    s"""<transformation>
+    tpl"""<transformation>
        |${transInfo(name)}
        |${connections.mkString("\n")}
        |  <order>
@@ -469,7 +443,7 @@ final class KettleEmitter(conf: Config,
        |  </slave-step-copy-partition-distribution>
        |  <slave_transformation>N</slave_transformation>
        |</transformation>
-       |""".stripMargin
+       |"""
 
   /** Full-copy transformation for one table (pl:944–968, 3362–4086). */
   private[emit] def copyTransformation(schema: String, t: TableDef): String = {
@@ -569,7 +543,7 @@ final class KettleEmitter(conf: Config,
   // --- job documents ---------------------------------------------------
 
   private def jobSqlEntry(name: String, sql: String, y: Int): String =
-    s"""    <entry>
+    tpl"""    <entry>
        |      <name>$name</name>
        |      <description/>
        |      <type>SQL</type>
@@ -584,10 +558,10 @@ final class KettleEmitter(conf: Config,
        |      <nr>0</nr>
        |      <xloc>38</xloc>
        |      <yloc>$y</yloc>
-       |    </entry>""".stripMargin
+       |    </entry>"""
 
   private def jobTransEntry(name: String, fileName: String, y: Int): String =
-    s"""    <entry>
+    tpl"""    <entry>
        |      <name>${esc(name)}</name>
        |      <description/>
        |      <type>TRANS</type>
@@ -620,11 +594,11 @@ final class KettleEmitter(conf: Config,
        |      <nr>0</nr>
        |      <xloc>197</xloc>
        |      <yloc>$y</yloc>
-       |    </entry>""".stripMargin
+       |    </entry>"""
 
   private def jobHop(from: String, to: String,
       unconditional: Boolean = false): String =
-    s"""    <hop>
+    tpl"""    <hop>
        |      <from>${esc(from)}</from>
        |      <to>${esc(to)}</to>
        |      <from_nr>0</from_nr>
@@ -632,7 +606,7 @@ final class KettleEmitter(conf: Config,
        |      <enabled>Y</enabled>
        |      <evaluation>Y</evaluation>
        |      <unconditional>${if (unconditional) "Y" else "N"}</unconditional>
-       |    </hop>""".stripMargin
+       |    </hop>"""
 
   /** Bracketing SQL for the job (pl:1281–1315): implicit-cast setup and
     * trigger disable before, reverse after.
@@ -683,7 +657,7 @@ final class KettleEmitter(conf: Config,
       y += 80
     }
     hops += jobHop(prev, "SQL SCRIPT END")
-    s"""<job>
+    tpl"""<job>
        |  <name>${esc(name)}</name>
        |  <description/>
        |  <extended_description/>
@@ -727,7 +701,7 @@ final class KettleEmitter(conf: Config,
        |  <notepads>
        |  </notepads>
        |</job>
-       |""".stripMargin
+       |"""
   }
 
   // --- public API ------------------------------------------------------
@@ -770,4 +744,75 @@ final class KettleEmitter(conf: Config,
       p
     }
   }
+}
+
+private object KettleEmitter {
+
+  /** Java source of the NUL-scrub step (see `nulScrubStep`). */
+  private val nulScrubSource: String =
+    """import java.util.Arrays;
+      |
+      |private int[] stringFieldIdx;
+      |
+      |public boolean processRow(StepMetaInterface smi, StepDataInterface sdi)
+      |    throws KettleException {
+      |  Object[] row = getRow();
+      |  if (row == null) { setOutputDone(); return false; }
+      |  if (first) {
+      |    RowMetaInterface meta = getInputRowMeta();
+      |    int n = meta.size();
+      |    int[] tmp = new int[n];
+      |    int k = 0;
+      |    for (int i = 0; i < n; i++) {
+      |      if (meta.getValueMeta(i).getType() == ValueMetaInterface.TYPE_STRING) {
+      |        tmp[k++] = i;
+      |      }
+      |    }
+      |    stringFieldIdx = Arrays.copyOf(tmp, k);
+      |    first = false;
+      |  }
+      |  Object[] out = createOutputRow(row, data.outputRowMeta.size());
+      |  for (int j = 0; j < stringFieldIdx.length; j++) {
+      |    int i = stringFieldIdx[j];
+      |    Object v = out[i];
+      |    if (v instanceof String && ((String) v).indexOf('\0') >= 0) {
+      |      out[i] = ((String) v).replace("\0", "");
+      |    }
+      |  }
+      |  putRow(data.outputRowMeta, out);
+      |  return true;
+      |}""".stripMargin
+
+  /** `tpl"""…"""`, the templates' interpolator: like `s"""…""".stripMargin`
+    * over the literal text only. Each template's literal parts are
+    * escape-processed and margin-stripped once, memoized on the parts;
+    * interpolated values are inserted verbatim, so a value line that
+    * starts with blanks and `|` keeps them.
+    */
+  implicit final class Template(private val sc: StringContext) extends AnyVal {
+    def tpl(args: Any*): String = {
+      val parts = literals.computeIfAbsent(sc.parts, stripParts)
+      val sb = new java.lang.StringBuilder(parts(0))
+      var i = 0
+      while (i < args.length) {
+        sb.append(args(i)).append(parts(i + 1))
+        i += 1
+      }
+      sb.toString
+    }
+  }
+
+  private val literals =
+    new java.util.concurrent.ConcurrentHashMap[Seq[String], Array[String]]
+
+  /** A part after the first starts mid-line (right after a value), so
+    * its first line keeps its text; every other line loses its margin. */
+  private val stripParts: java.util.function.Function[Seq[String], Array[String]] =
+    parts => parts.iterator.zipWithIndex.map { case (raw, i) =>
+      val lines = StringContext.processEscapes(raw).linesWithSeparators
+      val sb = new StringBuilder
+      if (i > 0 && lines.hasNext) sb ++= lines.next()
+      lines.foreach(l => sb ++= l.stripMargin)
+      sb.toString
+    }.toArray
 }

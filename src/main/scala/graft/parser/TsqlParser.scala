@@ -17,13 +17,12 @@ final class ParseException(msg: String) extends RuntimeException(msg)
   * (pl:1746–1775), matching the reference's explicit non-goal.
   */
 final class TsqlParser(conf: Config = Config()) {
+  import TsqlParser._
 
   private var cat = Catalog()
   private var domains = Map.empty[String, String]     // lower name → pg type
   private var tableTypes = Set.empty[String]
 
-  // identifier: [bracketed possibly with spaces] or bare word
-  private val ID = """(?:\[[^\]]+\]|[\w#$]+)"""
   private def unbr(s: String): String = {
     val t = s.trim
     if (t.startsWith("[") && t.endsWith("]")) t.substring(1, t.length - 1)
@@ -45,55 +44,6 @@ final class TsqlParser(conf: Config = Config()) {
     parse(LineCleaner.readFile(path))
 
   // ---- top-level statement recognizers -------------------------------
-
-  private val createTableRe =
-    s"""(?i)^\\s*CREATE\\s+TABLE\\s+(?:($ID)\\.)?($ID)\\s*\\(?\\s*$$""".r
-  private val createIndexRe =
-    s"""(?i)^\\s*CREATE\\s+(UNIQUE\\s+)?(?:(?:NON)?CLUSTERED\\s+)?(?:COLUMNSTORE\\s+)?INDEX\\s+""".r
-  private val createSpatialRe =
-    """(?i)^\s*CREATE\s+SPATIAL\s+INDEX\s+""".r
-  private val createViewRe =
-    s"""(?i)^\\s*CREATE\\s+VIEW\\s+""".r
-  private val createSeqRe =
-    """(?i)^\s*CREATE\s+SEQUENCE\s+""".r
-  private val createSchemaRe =
-    s"""(?i)^\\s*CREATE\\s+SCHEMA\\s+($ID).*$$""".r
-  private val createTypeFromRe =
-    s"""(?i)^\\s*CREATE\\s+TYPE\\s+(?:($ID)\\.)?($ID)\\s+FROM\\s+(.*)$$""".r
-  private val createTypeTableRe =
-    s"""(?i)^\\s*CREATE\\s+TYPE\\s+(?:($ID)\\.)?($ID)\\s+AS\\s+TABLE\\s*\\(?\\s*$$""".r
-  private val skipToGoRe =
-    """(?i)^\s*CREATE\s+(OR\s+ALTER\s+)?(PROC|PROCEDURE|FUNCTION|TRIGGER|DATABASE|FULLTEXT|XML\s+SCHEMA|USER|LOGIN|ROLE|PARTITION)\b.*""".r
-  private val alterTableRe =
-    s"""(?i)^\\s*ALTER\\s+TABLE\\s+(?:($ID)\\.)?($ID)\\s+(.*)$$""".r
-  private val alterIndexDisableRe =
-    s"""(?i)^\\s*ALTER\\s+INDEX\\s+($ID)\\s+ON\\s+(?:($ID)\\.)?($ID)\\s+DISABLE\\s*$$""".r
-  private val extPropRe =
-    """(?i)^\s*EXEC(?:UTE)?\s+(?:sys\.)?sp_addextendedproperty\b""".r
-  private val setvarRe =
-    """(?i)^\s*:setvar\s+(\S+)\s+"?([^"]*)"?\s*$""".r
-
-  /** A26 ignore list (pl:2424–2570): statements with no PG equivalent. */
-  private val ignoreRes: Seq[Regex] = Seq(
-    """(?i)^\s*$""".r,
-    """^\s*--.*$""".r,                     // line comments (pl:2430)
-    """(?i)^\s*GO\s*;?\s*$""".r,
-    """(?i)^\s*USE\s+.*$""".r,
-    """(?i)^\s*SET\s+\w+.*$""".r,
-    """(?i)^\s*GRANT\s+.*$""".r,
-    """(?i)^\s*REVOKE\s+.*$""".r,
-    """(?i)^\s*DENY\s+.*$""".r,
-    """(?i)^\s*ALTER\s+DATABASE\s+.*$""".r,
-    """(?i)^\s*ALTER\s+ROLE\s+.*$""".r,
-    """(?i)^\s*ALTER\s+AUTHORIZATION\s+.*$""".r,
-    """(?i)^\s*EXEC(?:UTE)?\s+.*$""".r,     // any other EXEC (system procs)
-    """(?i)^\s*DBCC\s+.*$""".r,
-    """(?i)^\s*PRINT\s+.*$""".r,
-    """(?i)^\s*BEGIN\s*$""".r,
-    """(?i)^\s*END\s*$""".r,
-    """(?i)^\s*COMMIT\s*;?\s*$""".r,
-    """(?i)^\s*;\s*$""".r
-  )
 
   private def dispatch(ls: Vector[String], i: Int): Int = {
     val line = ls(i)
@@ -120,14 +70,14 @@ final class TsqlParser(conf: Config = Config()) {
           unbr(name))
       case createTypeFromRe(sch, name, base) =>
         parseDomain(relabel(unbr(Option(sch).getOrElse("dbo"))), unbr(name),
-          base); i + 1
+          base, line); i + 1
       case createSchemaRe(name) =>
         val sn = relabel(unbr(name))
         cat = cat.updateSchema(sn)(identity); i + 1
       case skipToGoRe(_*) => // A10/A11 + databases etc: skip with warning
         cat = cat.warn(s"statement skipped (not migrated): ${t.take(80)}")
         skipToGo(ls, i)
-      case _ if """(?i)^\s*IF\s+.*""".r.matches(line) => skipToGo(ls, i)
+      case _ if ifRe.matches(line) => skipToGo(ls, i)
       case alterIndexDisableRe(idx, sch, tbl) => // A17
         val sn = relabel(unbr(Option(sch).getOrElse("dbo")))
         val in = unbr(idx)
@@ -148,12 +98,12 @@ final class TsqlParser(conf: Config = Config()) {
       case setvarRe(name, value) => // A25
         cat = cat.copy(variables = cat.variables + (name -> value)); i + 1
       case _ if ignoreRes.exists(_.matches(line)) =>
-        if ("""(?i).*ARITHABORT\s+OFF.*""".r.matches(line))
+        if (arithabortOffRe.matches(line))
           cat = cat.warn("ARITHABORT OFF: source data may expect 10/0=NULL " +
             "semantics (pl:2496–2508)")
         i + 1
       case _ => // A27: fail fast, like the reference (pl:2572)
-        throw new ParseException(s"Line <$line> not understood")
+        throw notUnderstood(line)
     }
   }
 
@@ -166,8 +116,6 @@ final class TsqlParser(conf: Config = Config()) {
 
   /** Gather a multi-line statement: until GO or a new top-level keyword. */
   private def gather(ls: Vector[String], i: Int): (String, Int) = {
-    val newStmt =
-      """(?i)^\s*(CREATE|ALTER|EXEC|EXECUTE|USE|SET|GRANT|REVOKE|DENY|INSERT|UPDATE|DELETE|:setvar|IF|DBCC|PRINT)\b.*""".r
     val sb = new StringBuilder(ls(i))
     var j = i + 1
     var continue = true
@@ -175,7 +123,7 @@ final class TsqlParser(conf: Config = Config()) {
       val t = ls(j).trim
       if (t.equalsIgnoreCase("GO")) { continue = false; j += 1 }
       else if (t.isEmpty && balanced(sb)) continue = false
-      else if (newStmt.matches(ls(j)) && balanced(sb)) continue = false
+      else if (newStmtRe.matches(ls(j)) && balanced(sb)) continue = false
       else { sb.append('\n').append(ls(j)); j += 1 }
     }
     (sb.toString, j)
@@ -203,15 +151,6 @@ final class TsqlParser(conf: Config = Config()) {
   }
 
   // ---- CREATE TABLE body (A3–A7) -------------------------------------
-
-  private val tableCloseRe =
-    """(?i)^\s*\)\s*(ON\s+.*|TEXTIMAGE_ON\s+.*)?\s*$""".r
-  private val computedColRe =
-    s"""(?i)^\\s*($ID)\\s+AS\\s+(\\(.*\\))\\s*(PERSISTED)?\\s*(NOT\\s+NULL)?\\s*,?\\s*$$""".r
-  private val inlinePkHeadRe =
-    s"""(?i)^\\s*(?:CONSTRAINT\\s+($ID)\\s+)?PRIMARY\\s+KEY\\s*(?:(?:NON)?CLUSTERED)?\\s*(?:HASH)?\\s*(.*)$$""".r
-  private val inlineUqHeadRe =
-    s"""(?i)^\\s*(?:CONSTRAINT\\s+($ID)\\s+)?UNIQUE\\s*(?:(?:NON)?CLUSTERED)?\\s*(.*)$$""".r
 
   private def parseTableBody(ls: Vector[String], start: Int, schema: String,
       table: String, origSchema: String): Int = {
@@ -254,8 +193,7 @@ final class TsqlParser(conf: Config = Config()) {
     */
   private def parseConstraintCols(ls: Vector[String], i: Int,
       sameLineRest: String): (Seq[String], Int) = {
-    val parenRe = """(?s)\((.*?)\)""".r
-    parenRe.findFirstMatchIn(sameLineRest.replaceAll("(?i)WITH\\s*\\(.*?\\)", "")) match {
+    parenRe.findFirstMatchIn(withOptionsRe.replaceAllIn(sameLineRest, "")) match {
       case Some(m) => (splitIndexCols(m.group(1)).map(_._1), i + 1)
       case None =>
         // multi-line: next lines form ( col ASC, … ) … close
@@ -281,36 +219,23 @@ final class TsqlParser(conf: Config = Config()) {
       (unbr(name), !dir.contains("DESC"))
     }
 
-  private val colRe = (
-    s"""(?i)^\\s*($ID)\\s+""" +               // column name
-    s"""(?:($ID)\\.)?($ID)\\s*""" +           // [type-schema.] type
-    """(?:\(\s*(max|\d+(?:\s*,\s*\d+)?)\s*\))?""" + // qualifier
-    """(.*)$"""                                // modifiers
-  ).r
-
   private def parseColumnDef(schema: String, table: String, line: String,
       pos: Int): Unit = line match {
     case colRe(name, typeSchema, typeName, qual, rest0) =>
       var rest = rest0
       // COLLATE, ROWGUIDCOL, SPARSE, NOT FOR REPLICATION: ignored (pl:1554+)
-      rest = rest.replaceAll("(?i)\\bCOLLATE\\s+\\S+", "")
-        .replaceAll("(?i)\\bROWGUIDCOL\\b", "")
-        .replaceAll("(?i)\\bSPARSE\\b", "")
-        .replaceAll("(?i)\\bNOT\\s+FOR\\s+REPLICATION\\b", "")
+      rest = ignoredColOptionRes.foldLeft(rest)((r, re) => re.replaceAllIn(r, ""))
       // IDENTITY(start, step)
-      val idRe = """(?i)\bIDENTITY\s*\(\s*(-?\d+)\s*,\s*(-?\d+)\s*\)""".r
-      val identity = idRe.findFirstMatchIn(rest)
-        .map(m => IdentityDef(m.group(1).toLong, m.group(2).toLong))
-      rest = idRe.replaceAllIn(rest, "")
+      val identity = identityRe.findFirstMatchIn(rest).map(m =>
+        IdentityDef(long(m.group(1), line), long(m.group(2), line)))
+      rest = identityRe.replaceAllIn(rest, "")
       // inline single-col PRIMARY KEY (HASH variant incl., F3)
-      val pkRe = """(?i)\bPRIMARY\s+KEY\s*(?:(?:NON)?CLUSTERED)?\s*(?:HASH)?\s*(?:WITH\s*\([^)]*\))?""".r
-      val inlinePk = pkRe.findFirstIn(rest).isDefined
-      rest = pkRe.replaceAllIn(rest, "")
+      val inlinePk = inlinePkRe.findFirstIn(rest).isDefined
+      rest = inlinePkRe.replaceAllIn(rest, "")
       // DEFAULT, optionally named
-      val defRe = """(?i)(?:CONSTRAINT\s+(\[[^\]]+\]|\w+)\s+)?DEFAULT\s*(\(.*\))""".r
-      val defaultRaw = defRe.findFirstMatchIn(rest).map(_.group(2))
-      rest = defRe.replaceAllIn(rest, "")
-      val notNull = """(?i)\bNOT\s+NULL\b""".r.findFirstIn(rest).isDefined
+      val defaultRaw = colDefaultRe.findFirstMatchIn(rest).map(_.group(2))
+      rest = colDefaultRe.replaceAllIn(rest, "")
+      val notNull = notNullRe.findFirstIn(rest).isDefined
 
       val colName = unbr(name)
       val tn = unbr(typeName).toLowerCase
@@ -318,14 +243,7 @@ final class TsqlParser(conf: Config = Config()) {
         cat = cat.warn(s"rowversion column $schema.$table.$colName dropped")
         return
       }
-      val (a1, a2, isMax) = qual match {
-        case null => (None, None, false)
-        case "max" => (None, None, true)
-        case q if q.contains(",") =>
-          val Array(p, s) = q.split(",").map(_.trim)
-          (Some(p.toInt), Some(s.toInt), false)
-        case q => (Some(q.trim.toInt), None, false)
-      }
+      val (a1, a2, isMax) = qualifier(qual, line)
       val st = SqlType(tn, Option(typeSchema).map(unbr), a1, a2, isMax)
       val conv = TypeMapper.convert(st, conf, domains, tableTypes)
       registerConvertedFlags(conv)
@@ -390,30 +308,16 @@ final class TsqlParser(conf: Config = Config()) {
 
   // ---- ALTER TABLE (A18–A23) -----------------------------------------
 
-  private val addPkRe =
-    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?PRIMARY\\s+KEY\\s*(?:(?:NON)?CLUSTERED)?\\s*(?:HASH)?\\s*\\((.*?)\\)""".r
-  private val addUqRe =
-    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?UNIQUE\\s*(?:(?:NON)?CLUSTERED)?\\s*\\((.*?)\\)""".r
-  private val addFkRe =
-    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?FOREIGN\\s+KEY\\s*\\(([^)]*)\\)\\s*REFERENCES\\s+(?:($ID)\\.)?($ID)\\s*\\(([^)]*)\\)(.*)$$""".r
-  private val addCheckRe =
-    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?CHECK\\s*(?:NOT\\s+FOR\\s+REPLICATION\\s*)?\\((.*)\\)\\s*;?\\s*$$""".r
-  private val addDefaultRe =
-    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?DEFAULT\\s*(\\(.*\\)|N?'[^']*'|[\\w.-]+)\\s+FOR\\s+($ID)\\s*;?\\s*$$""".r
-  private val addColumnRe =
-    s"""(?is)ADD\\s+($ID)\\s+(?:($ID)\\.)?($ID)\\s*(?:\\(\\s*(max|\\d+(?:\\s*,\\s*\\d+)?)\\s*\\))?(.*)$$""".r
-
   private def parseAlterTable(stmt: String): Unit = {
-    val m = alterTableRe.findFirstMatchIn(stmt.linesIterator.next()).getOrElse(
-      throw new ParseException(s"Line <$stmt> not understood"))
+    val m = alterTableRe.findFirstMatchIn(stmt.linesIterator.next())
+      .getOrElse(throw notUnderstood(stmt))
     val schema = relabel(unbr(Option(m.group(1)).getOrElse("dbo")))
     val table = unbr(m.group(2))
     // normalize: strip WITH [NO]CHECK noise
-    val body = stmt.replaceAll("(?i)\\bWITH\\s+(NO)?CHECK\\b", "")
+    val body = withCheckRe.replaceAllIn(stmt, "")
 
     body match {
-      case _ if """(?i).*\bCHECK\s+CONSTRAINT\b.*""".r.matches(
-          body.replace('\n', ' ')) =>
+      case _ if checkConstraintRe.matches(body.replace('\n', ' ')) =>
         () // enable-constraint statement — no-op
       case _ if addFkRe.findFirstIn(body).isDefined => // A22
         val fm = addFkRe.findFirstMatchIn(body).get
@@ -423,10 +327,10 @@ final class TsqlParser(conf: Config = Config()) {
           splitCols(fm.group(2)),
           relabel(unbr(Option(fm.group(3)).getOrElse("dbo"))),
           unbr(fm.group(4)), splitCols(fm.group(5)),
-          onDeleteCascade = """(?i)ON\s+DELETE\s+CASCADE""".r.findFirstIn(tail).isDefined,
-          onDeleteSetNull = """(?i)ON\s+DELETE\s+SET\s+NULL""".r.findFirstIn(tail).isDefined,
-          onUpdateCascade = """(?i)ON\s+UPDATE\s+CASCADE""".r.findFirstIn(tail).isDefined,
-          onUpdateSetNull = """(?i)ON\s+UPDATE\s+SET\s+NULL""".r.findFirstIn(tail).isDefined))
+          onDeleteCascade = onDeleteCascadeRe.findFirstIn(tail).isDefined,
+          onDeleteSetNull = onDeleteSetNullRe.findFirstIn(tail).isDefined,
+          onUpdateCascade = onUpdateCascadeRe.findFirstIn(tail).isDefined,
+          onUpdateSetNull = onUpdateSetNullRe.findFirstIn(tail).isDefined))
       case _ if addPkRe.findFirstIn(body).isDefined => // A19
         val pm = addPkRe.findFirstMatchIn(body).get
         addConstraint(schema, table, PrimaryKey(
@@ -470,15 +374,6 @@ final class TsqlParser(conf: Config = Config()) {
 
   // ---- CREATE INDEX (A15) --------------------------------------------
 
-  private val indexRe = (
-    s"""(?is)^\\s*CREATE\\s+(UNIQUE\\s+)?(?:(?:NON)?CLUSTERED\\s+)?INDEX\\s+($ID)\\s+""" +
-    s"""ON\\s+(?:($ID)\\.)?($ID)\\s*\\((.*?)\\)""" +
-    """(?:\s*INCLUDE\s*\((.*?)\))?""" +
-    """(?:\s*WHERE\s+(.*?))?""" +
-    """(?:\s*WITH\s*\([^)]*\))?""" +
-    """(?:\s*ON\s+\S+)?\s*$"""
-  ).r
-
   private def parseCreateIndex(stmt: String): Unit = {
     val one = stmt.linesIterator.mkString(" ")
     indexRe.findFirstMatchIn(one) match {
@@ -502,9 +397,6 @@ final class TsqlParser(conf: Config = Config()) {
   }
 
   // ---- CREATE VIEW (A12) ---------------------------------------------
-
-  private val viewRe =
-    s"""(?is)^\\s*CREATE\\s+VIEW\\s+(?:($ID)\\.)?($ID)\\s*(\\([^)]*\\))?\\s*AS\\s+(.*)$$""".r
 
   private def parseCreateView(stmt: String): Unit = stmt match {
     case viewRe(sch, name, colList, query) =>
@@ -533,9 +425,6 @@ final class TsqlParser(conf: Config = Config()) {
 
   // ---- CREATE SEQUENCE (A8) ------------------------------------------
 
-  private val seqRe =
-    s"""(?is)^\\s*CREATE\\s+SEQUENCE\\s+(?:($ID)\\.)?($ID)\\s*(.*)$$""".r
-
   private def parseCreateSequence(stmt: String): Unit = {
     val one = stmt.linesIterator.mkString(" ")
     seqRe.findFirstMatchIn(one) match {
@@ -543,14 +432,13 @@ final class TsqlParser(conf: Config = Config()) {
         val schema = relabel(unbr(Option(m.group(1)).getOrElse("dbo")))
         val name = unbr(m.group(2))
         val rest = m.group(3)
-        def num(kw: String): Option[Long] =
-          s"""(?i)\\b$kw\\s+(-?\\d+)""".r.findFirstMatchIn(rest)
-            .map(_.group(1).toLong)
+        def num(re: Regex): Option[Long] =
+          re.findFirstMatchIn(rest).map(m => long(m.group(1), stmt))
         cat = cat.updateSchema(schema) { sd =>
           sd.copy(sequences = sd.sequences + (name -> SequenceDef(name,
-            start = num("START\\s+WITH"), step = num("INCREMENT\\s+BY"),
-            min = num("MINVALUE"), max = num("MAXVALUE"),
-            cache = num("CACHE"))))
+            start = num(seqStartRe), step = num(seqIncrementRe),
+            min = num(seqMinRe), max = num(seqMaxRe),
+            cache = num(seqCacheRe))))
         }
       case None =>
         throw new ParseException(s"Line <$stmt> not understood (SEQUENCE)")
@@ -559,19 +447,11 @@ final class TsqlParser(conf: Config = Config()) {
 
   // ---- CREATE TYPE (A13/A14) -----------------------------------------
 
-  private def parseDomain(schema: String, name: String, base: String): Unit = {
+  private def parseDomain(schema: String, name: String, base: String,
+      line: String): Unit = {
     val baseClean = base.trim.stripSuffix(";")
-    val tm = s"""(?i)^\\s*\\[?(\\w+)\\]?\\s*(?:\\(\\s*(max|\\d+(?:\\s*,\\s*\\d+)?)\\s*\\))?.*$$""".r
-    val pg = tm.findFirstMatchIn(baseClean).map { m =>
-      val qual = Option(m.group(2))
-      val (a1, a2, isMax) = qual match {
-        case None => (None, None, false)
-        case Some("max") => (None, None, true)
-        case Some(q) if q.contains(",") =>
-          val Array(p, s) = q.split(",").map(_.trim.toInt)
-          (Some(p), Some(s), false)
-        case Some(q) => (Some(q.trim.toInt), None, false)
-      }
+    val pg = domainBaseRe.findFirstMatchIn(baseClean).map { m =>
+      val (a1, a2, isMax) = qualifier(m.group(2), line)
       TypeMapper.convert(SqlType(m.group(1).toLowerCase, None, a1, a2, isMax),
         conf, domains, tableTypes).pgType
     }.getOrElse("text")
@@ -592,7 +472,7 @@ final class TsqlParser(conf: Config = Config()) {
       val t = ls(i).trim
       if (t.isEmpty || t.equalsIgnoreCase("GO")) i += 1
       else if (t.startsWith(")")) { done = true; i += 1 }
-      else if ("""(?i)^\s*(CONSTRAINT\s+.*)?PRIMARY\s+KEY.*""".r.matches(t)) {
+      else if (tableTypePkRe.matches(t)) {
         cat = cat.warn(s"PK inside table type $schema.$name ignored " +
           "(reference parity, pl:1943–1951)")
         // skip its col list if multi-line
@@ -602,15 +482,7 @@ final class TsqlParser(conf: Config = Config()) {
         i += 1
       } else {
         colRe.findFirstMatchIn(ls(i)).foreach { m =>
-          val qual = Option(m.group(4))
-          val (a1, a2, isMax) = qual match {
-            case None => (None, None, false)
-            case Some("max") => (None, None, true)
-            case Some(q) if q.contains(",") =>
-              val Array(p, s) = q.split(",").map(_.trim.toInt)
-              (Some(p), Some(s), false)
-            case Some(q) => (Some(q.trim.toInt), None, false)
-          }
+          val (a1, a2, isMax) = qualifier(m.group(4), ls(i))
           val conv = TypeMapper.convert(
             SqlType(unbr(m.group(3)).toLowerCase, None, a1, a2, isMax),
             conf, domains, tableTypes)
@@ -630,7 +502,7 @@ final class TsqlParser(conf: Config = Config()) {
   private def parseExtendedProperty(stmt: String): Unit = {
     val one = stmt.linesIterator.mkString(" ")
     def arg(k: String): Option[String] =
-      s"""(?i)@$k\\s*=\\s*N?'((?:[^']|'')*)'""".r.findFirstMatchIn(one)
+      extPropArgRes(k).findFirstMatchIn(one)
         .map(_.group(1).replace("''", "'"))
     val propName = arg("name").getOrElse("")
     // MS_Description / MS_SSMA_SOURCE become comments (pl:2322–2386),
@@ -675,4 +547,184 @@ final class TsqlParser(conf: Config = Config()) {
       case _ => () // constraint-level and exotic targets: ignored
     }
   }
+}
+
+/** The parser's patterns, compiled once per JVM rather than per parser
+  * or per call. */
+object TsqlParser {
+
+  // identifier: [bracketed possibly with spaces] or bare word
+  private val ID = """(?:\[[^\]]+\]|[\w#$]+)"""
+
+  private def notUnderstood(line: String) =
+    new ParseException(s"Line <$line> not understood")
+
+  /** A number in the dump; one that does not fit fails like any other
+    * line not understood. */
+  private def int(s: String, line: String): Int =
+    s.trim.toIntOption.getOrElse(throw notUnderstood(line))
+
+  private def long(s: String, line: String): Long =
+    s.trim.toLongOption.getOrElse(throw notUnderstood(line))
+
+  /** A type's `(n)`, `(p, s)` or `(max)` qualifier (null when absent) →
+    * (arg1, arg2, isMax). */
+  private def qualifier(q: String,
+      line: String): (Option[Int], Option[Int], Boolean) = q match {
+    case null => (None, None, false)
+    case _ if q.equalsIgnoreCase("max") => (None, None, true)
+    case _ => q.split(",") match { // the patterns allow one comma at most
+      case Array(p) => (Some(int(p, line)), None, false)
+      case Array(p, s) => (Some(int(p, line)), Some(int(s, line)), false)
+    }
+  }
+
+  // ---- top-level statement recognizers -------------------------------
+
+  private val createTableRe =
+    s"""(?i)^\\s*CREATE\\s+TABLE\\s+(?:($ID)\\.)?($ID)\\s*\\(?\\s*$$""".r
+  private val createIndexRe =
+    s"""(?i)^\\s*CREATE\\s+(UNIQUE\\s+)?(?:(?:NON)?CLUSTERED\\s+)?(?:COLUMNSTORE\\s+)?INDEX\\s+""".r
+  private val createSpatialRe =
+    """(?i)^\s*CREATE\s+SPATIAL\s+INDEX\s+""".r
+  private val createViewRe =
+    s"""(?i)^\\s*CREATE\\s+VIEW\\s+""".r
+  private val createSeqRe =
+    """(?i)^\s*CREATE\s+SEQUENCE\s+""".r
+  private val createSchemaRe =
+    s"""(?i)^\\s*CREATE\\s+SCHEMA\\s+($ID).*$$""".r
+  private val createTypeFromRe =
+    s"""(?i)^\\s*CREATE\\s+TYPE\\s+(?:($ID)\\.)?($ID)\\s+FROM\\s+(.*)$$""".r
+  private val createTypeTableRe =
+    s"""(?i)^\\s*CREATE\\s+TYPE\\s+(?:($ID)\\.)?($ID)\\s+AS\\s+TABLE\\s*\\(?\\s*$$""".r
+  private val skipToGoRe =
+    """(?i)^\s*CREATE\s+(OR\s+ALTER\s+)?(PROC|PROCEDURE|FUNCTION|TRIGGER|DATABASE|FULLTEXT|XML\s+SCHEMA|USER|LOGIN|ROLE|PARTITION)\b.*""".r
+  private val ifRe = """(?i)^\s*IF\s+.*""".r
+  private val alterTableRe =
+    s"""(?i)^\\s*ALTER\\s+TABLE\\s+(?:($ID)\\.)?($ID)\\s+(.*)$$""".r
+  private val alterIndexDisableRe =
+    s"""(?i)^\\s*ALTER\\s+INDEX\\s+($ID)\\s+ON\\s+(?:($ID)\\.)?($ID)\\s+DISABLE\\s*$$""".r
+  private val extPropRe =
+    """(?i)^\s*EXEC(?:UTE)?\s+(?:sys\.)?sp_addextendedproperty\b""".r
+  private val setvarRe =
+    """(?i)^\s*:setvar\s+(\S+)\s+"?([^"]*)"?\s*$""".r
+
+  /** A26 ignore list (pl:2424–2570): statements with no PG equivalent. */
+  private val ignoreRes: Seq[Regex] = Seq(
+    """(?i)^\s*$""".r,
+    """^\s*--.*$""".r,                     // line comments (pl:2430)
+    """(?i)^\s*GO\s*;?\s*$""".r,
+    """(?i)^\s*USE\s+.*$""".r,
+    """(?i)^\s*SET\s+\w+.*$""".r,
+    """(?i)^\s*GRANT\s+.*$""".r,
+    """(?i)^\s*REVOKE\s+.*$""".r,
+    """(?i)^\s*DENY\s+.*$""".r,
+    """(?i)^\s*ALTER\s+DATABASE\s+.*$""".r,
+    """(?i)^\s*ALTER\s+ROLE\s+.*$""".r,
+    """(?i)^\s*ALTER\s+AUTHORIZATION\s+.*$""".r,
+    """(?i)^\s*EXEC(?:UTE)?\s+.*$""".r,     // any other EXEC (system procs)
+    """(?i)^\s*DBCC\s+.*$""".r,
+    """(?i)^\s*PRINT\s+.*$""".r,
+    """(?i)^\s*BEGIN\s*$""".r,
+    """(?i)^\s*END\s*$""".r,
+    """(?i)^\s*COMMIT\s*;?\s*$""".r,
+    """(?i)^\s*;\s*$""".r
+  )
+  private val arithabortOffRe = """(?i).*ARITHABORT\s+OFF.*""".r
+
+  /** A line that starts a new statement ends a gathered one. */
+  private val newStmtRe =
+    """(?i)^\s*(CREATE|ALTER|EXEC|EXECUTE|USE|SET|GRANT|REVOKE|DENY|INSERT|UPDATE|DELETE|:setvar|IF|DBCC|PRINT)\b.*""".r
+
+  // ---- CREATE TABLE body (A3–A7) -------------------------------------
+
+  private val tableCloseRe =
+    """(?i)^\s*\)\s*(ON\s+.*|TEXTIMAGE_ON\s+.*)?\s*$""".r
+  private val computedColRe =
+    s"""(?i)^\\s*($ID)\\s+AS\\s+(\\(.*\\))\\s*(PERSISTED)?\\s*(NOT\\s+NULL)?\\s*,?\\s*$$""".r
+  private val inlinePkHeadRe =
+    s"""(?i)^\\s*(?:CONSTRAINT\\s+($ID)\\s+)?PRIMARY\\s+KEY\\s*(?:(?:NON)?CLUSTERED)?\\s*(?:HASH)?\\s*(.*)$$""".r
+  private val inlineUqHeadRe =
+    s"""(?i)^\\s*(?:CONSTRAINT\\s+($ID)\\s+)?UNIQUE\\s*(?:(?:NON)?CLUSTERED)?\\s*(.*)$$""".r
+  private val parenRe = """(?s)\((.*?)\)""".r
+  private val withOptionsRe = """(?i)WITH\s*\(.*?\)""".r
+
+  private val colRe = (
+    s"""(?i)^\\s*($ID)\\s+""" +               // column name
+    s"""(?:($ID)\\.)?($ID)\\s*""" +           // [type-schema.] type
+    """(?:\(\s*(max|\d+(?:\s*,\s*\d+)?)\s*\))?""" + // qualifier
+    """(.*)$"""                                // modifiers
+  ).r
+  // COLLATE, ROWGUIDCOL, SPARSE, NOT FOR REPLICATION: removed in turn
+  private val ignoredColOptionRes: Seq[Regex] = Seq(
+    """(?i)\bCOLLATE\s+\S+""".r,
+    """(?i)\bROWGUIDCOL\b""".r,
+    """(?i)\bSPARSE\b""".r,
+    """(?i)\bNOT\s+FOR\s+REPLICATION\b""".r)
+  private val identityRe =
+    """(?i)\bIDENTITY\s*\(\s*(-?\d+)\s*,\s*(-?\d+)\s*\)""".r
+  private val inlinePkRe =
+    """(?i)\bPRIMARY\s+KEY\s*(?:(?:NON)?CLUSTERED)?\s*(?:HASH)?\s*(?:WITH\s*\([^)]*\))?""".r
+  private val colDefaultRe =
+    """(?i)(?:CONSTRAINT\s+(\[[^\]]+\]|\w+)\s+)?DEFAULT\s*(\(.*\))""".r
+  private val notNullRe = """(?i)\bNOT\s+NULL\b""".r
+
+  // ---- ALTER TABLE (A18–A23) -----------------------------------------
+
+  private val withCheckRe = """(?i)\bWITH\s+(NO)?CHECK\b""".r
+  private val checkConstraintRe = """(?i).*\bCHECK\s+CONSTRAINT\b.*""".r
+  private val addPkRe =
+    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?PRIMARY\\s+KEY\\s*(?:(?:NON)?CLUSTERED)?\\s*(?:HASH)?\\s*\\((.*?)\\)""".r
+  private val addUqRe =
+    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?UNIQUE\\s*(?:(?:NON)?CLUSTERED)?\\s*\\((.*?)\\)""".r
+  private val addFkRe =
+    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?FOREIGN\\s+KEY\\s*\\(([^)]*)\\)\\s*REFERENCES\\s+(?:($ID)\\.)?($ID)\\s*\\(([^)]*)\\)(.*)$$""".r
+  private val onDeleteCascadeRe = """(?i)ON\s+DELETE\s+CASCADE""".r
+  private val onDeleteSetNullRe = """(?i)ON\s+DELETE\s+SET\s+NULL""".r
+  private val onUpdateCascadeRe = """(?i)ON\s+UPDATE\s+CASCADE""".r
+  private val onUpdateSetNullRe = """(?i)ON\s+UPDATE\s+SET\s+NULL""".r
+  private val addCheckRe =
+    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?CHECK\\s*(?:NOT\\s+FOR\\s+REPLICATION\\s*)?\\((.*)\\)\\s*;?\\s*$$""".r
+  private val addDefaultRe =
+    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?DEFAULT\\s*(\\(.*\\)|N?'[^']*'|[\\w.-]+)\\s+FOR\\s+($ID)\\s*;?\\s*$$""".r
+  private val addColumnRe =
+    s"""(?is)ADD\\s+($ID)\\s+(?:($ID)\\.)?($ID)\\s*(?:\\(\\s*(max|\\d+(?:\\s*,\\s*\\d+)?)\\s*\\))?(.*)$$""".r
+
+  // ---- CREATE INDEX (A15) --------------------------------------------
+
+  private val indexRe = (
+    s"""(?is)^\\s*CREATE\\s+(UNIQUE\\s+)?(?:(?:NON)?CLUSTERED\\s+)?INDEX\\s+($ID)\\s+""" +
+    s"""ON\\s+(?:($ID)\\.)?($ID)\\s*\\((.*?)\\)""" +
+    """(?:\s*INCLUDE\s*\((.*?)\))?""" +
+    """(?:\s*WHERE\s+(.*?))?""" +
+    """(?:\s*WITH\s*\([^)]*\))?""" +
+    """(?:\s*ON\s+\S+)?\s*$"""
+  ).r
+
+  // ---- CREATE VIEW (A12) ---------------------------------------------
+
+  private val viewRe =
+    s"""(?is)^\\s*CREATE\\s+VIEW\\s+(?:($ID)\\.)?($ID)\\s*(\\([^)]*\\))?\\s*AS\\s+(.*)$$""".r
+
+  // ---- CREATE SEQUENCE (A8) ------------------------------------------
+
+  private val seqRe =
+    s"""(?is)^\\s*CREATE\\s+SEQUENCE\\s+(?:($ID)\\.)?($ID)\\s*(.*)$$""".r
+  private val seqStartRe = """(?i)\bSTART\s+WITH\s+(-?\d+)""".r
+  private val seqIncrementRe = """(?i)\bINCREMENT\s+BY\s+(-?\d+)""".r
+  private val seqMinRe = """(?i)\bMINVALUE\s+(-?\d+)""".r
+  private val seqMaxRe = """(?i)\bMAXVALUE\s+(-?\d+)""".r
+  private val seqCacheRe = """(?i)\bCACHE\s+(-?\d+)""".r
+
+  // ---- CREATE TYPE (A13/A14) -----------------------------------------
+
+  private val domainBaseRe =
+    """(?i)^\s*\[?(\w+)\]?\s*(?:\(\s*(max|\d+(?:\s*,\s*\d+)?)\s*\))?.*$""".r
+  private val tableTypePkRe = """(?i)^\s*(CONSTRAINT\s+.*)?PRIMARY\s+KEY.*""".r
+
+  // ---- sp_addextendedproperty (A24) ----------------------------------
+
+  private val extPropArgRes: Map[String, Regex] = Seq("name", "value",
+    "level0name", "level1type", "level1name", "level2type", "level2name")
+    .map(k => k -> s"""(?i)@$k\\s*=\\s*N?'((?:[^']|'')*)'""".r).toMap
 }

@@ -291,4 +291,95 @@ class TsqlParserSpec extends AnyFunSuite {
     assert(t.colByName("rid").get.identity === Some(IdentityDef(1000, 1)))
     assert(t.hasLobs) // nvarchar(max)
   }
+
+  private def notUnderstood(sql: String): ParseException = {
+    val e = intercept[ParseException](parse(sql))
+    assert(e.getMessage.startsWith("Line <") &&
+      e.getMessage.contains("not understood"), e.getMessage)
+    e
+  }
+
+  test("a type length past Int fails as a line not understood") {
+    notUnderstood(
+      """CREATE TABLE [dbo].[T](
+        |	[a] [nvarchar](99999999999) NULL
+        |) ON [PRIMARY]""".stripMargin)
+    notUnderstood(
+      """CREATE TABLE [dbo].[T](
+        |	[a] [decimal](12, 99999999999) NULL
+        |) ON [PRIMARY]""".stripMargin)
+    notUnderstood("CREATE TYPE [dbo].[D] FROM [nvarchar](99999999999) NULL")
+    notUnderstood(
+      """CREATE TYPE [dbo].[TT] AS TABLE(
+        |	[a] [varchar](99999999999) NULL
+        |)""".stripMargin)
+  }
+
+  test("an IDENTITY seed past Long fails as a line not understood") {
+    notUnderstood(
+      """CREATE TABLE [dbo].[T](
+        |	[id] [bigint] IDENTITY(99999999999999999999, 1) NOT NULL
+        |) ON [PRIMARY]""".stripMargin)
+  }
+
+  test("a sequence START WITH past Long fails as a line not understood") {
+    notUnderstood(
+      """CREATE SEQUENCE [dbo].[S]
+        | AS [bigint]
+        | START WITH 99999999999999999999
+        | INCREMENT BY 1
+        |GO""".stripMargin)
+  }
+
+  test("a (MAX) qualifier in capitals means max, like (max)") {
+    val cat = parse(
+      """CREATE TABLE [dbo].[T](
+        |	[a] [nvarchar](MAX) NULL,
+        |	[b] [varbinary](Max) NULL
+        |) ON [PRIMARY]
+        |GO
+        |CREATE TYPE [dbo].[D] FROM [varchar](MAX) NULL
+        |GO""".stripMargin)
+    val t = cat.table("public", "T").get
+    assert(t.cols.map(_.sqlType.isMax) === Seq(true, true))
+    assert(t.cols.map(_.pgType) === Seq("varchar", "bytea"))
+    assert(cat.schemas("public").domains("D") === "varchar")
+  }
+
+  test("property: a mutated golden-dump line parses or fails with ParseException") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val lines = graft.emit.FrontEndGoldenSpec.dumpText.split("\r\n").toVector
+    val junk = Gen.oneOf("(", ")", "[", "]", "'", ",", " ", "\t", "-", "*",
+      "/", ";", "=", "N'", "GO", "AS", "99999999999999999999", "MAX", "x")
+    val mutation: Gen[Vector[String]] = for {
+      i <- Gen.choose(0, lines.size - 1)
+      line = lines(i)
+      a <- Gen.choose(0, line.length)
+      b <- Gen.choose(a, line.length)
+      ins <- junk
+      kind <- Gen.choose(0, 4)
+    } yield {
+      val mutated = kind match {
+        case 0 => line.substring(0, a) + ins + line.substring(a)  // insert
+        case 1 => line.substring(0, a) + line.substring(b)        // delete
+        case 2 => line.substring(0, a)                            // truncate
+        case 3 => line.substring(0, a) + ins + line.substring(b)  // replace
+        case _ => "\\d+".r.replaceAllIn(line, "99999999999999999999")
+      }
+      lines.updated(i, mutated)
+    }
+    val samples = (1 to 400).flatMap(n =>
+      mutation.apply(Gen.Parameters.default, Seed(n.toLong)))
+    assert(samples.size == 400)
+    samples.foreach { dump =>
+      try new TsqlParser(Config()).parse(dump)
+      catch {
+        case _: ParseException =>
+        case e: Throwable =>
+          fail(s"${e.getClass.getName}: ${e.getMessage} on\n" +
+            dump.zip(lines).filter(p => p._1 != p._2).map(_._1).mkString, e)
+      }
+    }
+  }
 }
