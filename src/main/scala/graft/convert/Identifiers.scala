@@ -1,6 +1,7 @@
 package graft.convert
 
 import graft.catalog._
+import java.nio.charset.StandardCharsets
 
 /** B9–B13: identifier policy, PK sort-safety, name-conflict resolution.
   *
@@ -51,7 +52,7 @@ object Identifiers {
   def format(s: String, conf: Config): (String, Seq[String]) = {
     val renamed = rename(s, conf)
     val warnings =
-      if (renamed.getBytes("UTF-8").length > PgMaxIdentLen)
+      if (renamed.getBytes(StandardCharsets.UTF_8).length > PgMaxIdentLen)
         Seq(s"identifier <$renamed> longer than $PgMaxIdentLen bytes — " +
           "PostgreSQL will truncate it")
       else Nil
@@ -79,7 +80,7 @@ object Identifiers {
     * (pl:573–583).
     */
   def constraintNameValid(name: String): Boolean =
-    name.getBytes("UTF-8").length <= PgMaxIdentLen
+    name.getBytes(StandardCharsets.UTF_8).length <= PgMaxIdentLen
 
   /** B12: a PK ordering survives cross-database comparison only when every
     * PK column's type is collation-independent — numeric/date/time kinds

@@ -1,10 +1,12 @@
 package graft.operators
 
 import java.sql.{Connection, DriverManager, PreparedStatement}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.jdbc.JdbcDialects
 import org.apache.spark.sql.types.StructType
-import scala.jdk.CollectionConverters._
 
 /** C1/C6 + P3/P5/P12 + C16: the one JDBC partition writer. The copy
   * (TableOutput, sqlserver2pgsql.pl:3680–3727), its -ignore_errors mode
@@ -123,28 +125,40 @@ object JdbcSink {
     }.toMap)
   }
 
-  /** Runs [[writePartition]] in `df`'s own stages (the writer never
-    * reshapes its input) and sums the partitions' tallies; Spark merges
-    * an accumulator once per successful task, so a retry counts once. */
-  private[operators] def run(df: DataFrame, plan: Plan): Tally = {
-    val acc = df.sparkSession.sparkContext.collectionAccumulator[Tally]("jdbc.write")
-    df.foreachPartition((rows: Iterator[Row]) => acc.add(writePartition(plan, rows)))
-    acc.value.asScala.foldLeft(Tally())(_ + _)
+  /** Runs [[writePartition]] on every partition of `df`, shaped to
+    * `numPartitions` when given (coalesce down without a shuffle,
+    * repartition up), else in `df`'s own stages, and sums the
+    * partitions' tallies. The whole write is one SQL execution holding
+    * one job on `df`'s executed plan: no second execution to learn the
+    * partition count, and an `Observation` on `df` completes with it.
+    * Spark keeps one result per partition, so a retried task counts
+    * once. */
+  private[operators] def run(df: DataFrame, plan: Plan,
+      numPartitions: Option[Int] = None): Tally = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("jdbc.write")) {
+      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+      val rows = qe.toRdd.mapPartitions(_.map(toRow(_).asInstanceOf[Row]))
+      val shaped = numPartitions.fold(rows) { n =>
+        val have = rows.getNumPartitions
+        if (have > n) rows.coalesce(n) else if (have < n) rows.repartition(n) else rows
+      }
+      // the TaskContext overload: the Iterator-only one wraps the writer
+      // in a closure of SparkContext's, whose class ClosureCleaner reads
+      df.sparkSession.sparkContext.runJob(shaped,
+        (_: TaskContext, it: Iterator[Row]) => writePartition(plan, it))
+        .foldLeft(Tally())(_ + _)
+    }
   }
 
-  /** The copy (C1) into an existing table: `-po` shaping (coalesce down
-    * without a shuffle, repartition UP), the dialect's TRUNCATE on the
-    * driver when `truncate`, then the partition writer. */
+  /** The copy (C1) into an existing table: the dialect's TRUNCATE on the
+    * driver when `truncate`, then the partition writer on `-po`
+    * partitions. */
   def write(df: DataFrame, spec: Spec): Tally = {
-    val n = df.rdd.getNumPartitions
-    val shaped =
-      if (n > spec.numPartitions) df.coalesce(spec.numPartitions)
-      else if (n < spec.numPartitions) df.repartition(spec.numPartitions)
-      else df
     val conn = connOf(spec)
     val tgt = target(conn, spec.table, df, df.columns.toSeq, spec.truncate)
-    run(shaped, Plan(conn, spec.batchSize, spec.ignoreErrors, flag = -1,
-      insert = tgt.insert(df.columns.toSeq)))
+    run(df, Plan(conn, spec.batchSize, spec.ignoreErrors, flag = -1,
+      insert = tgt.insert(df.columns.toSeq)), Some(spec.numPartitions))
   }
 
   /** The batch-then-row core (P12). A failed batch (rolled back by

@@ -319,48 +319,41 @@ final class TsqlParser(conf: Config = Config()) {
     body match {
       case _ if checkConstraintRe.matches(body.replace('\n', ' ')) =>
         () // enable-constraint statement — no-op
-      case _ if addFkRe.findFirstIn(body).isDefined => // A22
-        val fm = addFkRe.findFirstMatchIn(body).get
-        val tail = fm.group(6)
+      case addFkRe(name, cols, refSchema, refTable, refCols, tail) => // A22
         addConstraint(schema, table, ForeignKey(
-          Option(fm.group(1)).map(unbr).filter(Identifiers.constraintNameValid),
-          splitCols(fm.group(2)),
-          relabel(unbr(Option(fm.group(3)).getOrElse("dbo"))),
-          unbr(fm.group(4)), splitCols(fm.group(5)),
+          Option(name).map(unbr).filter(Identifiers.constraintNameValid),
+          splitCols(cols),
+          relabel(unbr(Option(refSchema).getOrElse("dbo"))),
+          unbr(refTable), splitCols(refCols),
           onDeleteCascade = onDeleteCascadeRe.findFirstIn(tail).isDefined,
           onDeleteSetNull = onDeleteSetNullRe.findFirstIn(tail).isDefined,
           onUpdateCascade = onUpdateCascadeRe.findFirstIn(tail).isDefined,
           onUpdateSetNull = onUpdateSetNullRe.findFirstIn(tail).isDefined))
-      case _ if addPkRe.findFirstIn(body).isDefined => // A19
-        val pm = addPkRe.findFirstMatchIn(body).get
+      case addPkRe(name, cols) => // A19
         addConstraint(schema, table, PrimaryKey(
-          Option(pm.group(1)).map(unbr).filter(Identifiers.constraintNameValid),
-          splitIndexCols(pm.group(2)).map(_._1)))
-      case _ if addUqRe.findFirstIn(body).isDefined => // A20
-        val um = addUqRe.findFirstMatchIn(body).get
+          Option(name).map(unbr).filter(Identifiers.constraintNameValid),
+          splitIndexCols(cols).map(_._1)))
+      case addUqRe(name, cols) => // A20
         addConstraint(schema, table, Unique(
-          Option(um.group(1)).map(unbr).filter(Identifiers.constraintNameValid),
-          splitIndexCols(um.group(2)).map(_._1)))
-      case _ if addDefaultRe.findFirstIn(body).isDefined => // A21
-        val dm = addDefaultRe.findFirstMatchIn(body).get
-        val col = unbr(dm.group(3))
+          Option(name).map(unbr).filter(Identifiers.constraintNameValid),
+          splitIndexCols(cols).map(_._1)))
+      case addDefaultRe(_, value, column) => // A21
+        val col = unbr(column)
         val isBit = cat.table(schema, table)
           .flatMap(_.colByName(col)).exists(_.sqlType.name == "bit")
-        val (v, unsure) = TypeMapper.normalizeDefault(dm.group(2), isBit)
+        val (v, unsure) = TypeMapper.normalizeDefault(value, isBit)
         cat = cat.updateTable(schema, table) { t =>
           t.copy(cols = t.cols.map(c =>
             if (c.name.equalsIgnoreCase(col))
               c.copy(default = Some(DefaultDef(v, unsure))) else c))
         }
-      case _ if addCheckRe.findFirstIn(body).isDefined => // A23
-        val cm = addCheckRe.findFirstMatchIn(body).get
-        val pred = ExprRewriter.rewrite(cm.group(2), ExprRewriter.Pg,
+      case addCheckRe(name, check) => // A23
+        val pred = ExprRewriter.rewrite(check, ExprRewriter.Pg,
           n => Identifiers.format(n, conf)._1)
         addConstraint(schema, table, Check(
-          Option(cm.group(1)).map(unbr).filter(Identifiers.constraintNameValid),
+          Option(name).map(unbr).filter(Identifiers.constraintNameValid),
           pred, unsure = true))
-      case _ if addColumnRe.findFirstIn(body).isDefined => // A18
-        val am = addColumnRe.findFirstMatchIn(body).get
+      case addColumnRe(_*) => // A18
         val colLine = body.substring(body.toUpperCase.indexOf("ADD") + 3)
         val pos = cat.table(schema, table).map(_.cols.size).getOrElse(0) + 1
         parseColumnDef(schema, table, colLine, pos)
@@ -673,22 +666,23 @@ object TsqlParser {
 
   private val withCheckRe = """(?i)\bWITH\s+(NO)?CHECK\b""".r
   private val checkConstraintRe = """(?i).*\bCHECK\s+CONSTRAINT\b.*""".r
+  // the ADD forms match as unanchored extractors: one search each
   private val addPkRe =
-    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?PRIMARY\\s+KEY\\s*(?:(?:NON)?CLUSTERED)?\\s*(?:HASH)?\\s*\\((.*?)\\)""".r
+    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?PRIMARY\\s+KEY\\s*(?:(?:NON)?CLUSTERED)?\\s*(?:HASH)?\\s*\\((.*?)\\)""".r.unanchored
   private val addUqRe =
-    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?UNIQUE\\s*(?:(?:NON)?CLUSTERED)?\\s*\\((.*?)\\)""".r
+    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?UNIQUE\\s*(?:(?:NON)?CLUSTERED)?\\s*\\((.*?)\\)""".r.unanchored
   private val addFkRe =
-    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?FOREIGN\\s+KEY\\s*\\(([^)]*)\\)\\s*REFERENCES\\s+(?:($ID)\\.)?($ID)\\s*\\(([^)]*)\\)(.*)$$""".r
+    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?FOREIGN\\s+KEY\\s*\\(([^)]*)\\)\\s*REFERENCES\\s+(?:($ID)\\.)?($ID)\\s*\\(([^)]*)\\)(.*)$$""".r.unanchored
   private val onDeleteCascadeRe = """(?i)ON\s+DELETE\s+CASCADE""".r
   private val onDeleteSetNullRe = """(?i)ON\s+DELETE\s+SET\s+NULL""".r
   private val onUpdateCascadeRe = """(?i)ON\s+UPDATE\s+CASCADE""".r
   private val onUpdateSetNullRe = """(?i)ON\s+UPDATE\s+SET\s+NULL""".r
   private val addCheckRe =
-    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?CHECK\\s*(?:NOT\\s+FOR\\s+REPLICATION\\s*)?\\((.*)\\)\\s*;?\\s*$$""".r
+    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?CHECK\\s*(?:NOT\\s+FOR\\s+REPLICATION\\s*)?\\((.*)\\)\\s*;?\\s*$$""".r.unanchored
   private val addDefaultRe =
-    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?DEFAULT\\s*(\\(.*\\)|N?'[^']*'|[\\w.-]+)\\s+FOR\\s+($ID)\\s*;?\\s*$$""".r
+    s"""(?is)ADD\\s+(?:CONSTRAINT\\s+($ID)\\s+)?DEFAULT\\s*(\\(.*\\)|N?'[^']*'|[\\w.-]+)\\s+FOR\\s+($ID)\\s*;?\\s*$$""".r.unanchored
   private val addColumnRe =
-    s"""(?is)ADD\\s+($ID)\\s+(?:($ID)\\.)?($ID)\\s*(?:\\(\\s*(max|\\d+(?:\\s*,\\s*\\d+)?)\\s*\\))?(.*)$$""".r
+    s"""(?is)ADD\\s+($ID)\\s+(?:($ID)\\.)?($ID)\\s*(?:\\(\\s*(max|\\d+(?:\\s*,\\s*\\d+)?)\\s*\\))?(.*)$$""".r.unanchored
 
   // ---- CREATE INDEX (A15) --------------------------------------------
 

@@ -1,13 +1,15 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageSubmitted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.sources.Tables
 import java.sql.DriverManager
+import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.{Await, Promise}
 import scala.concurrent.duration._
 
@@ -56,35 +58,60 @@ class JdbcIntegrationSpec extends AnyFunSuite with SparkTestBase {
     seed(tgt, (11L to 210L).map(i => (i, if (i % 20 == 0) i + 0.5 else i.toDouble)))
   }
 
-  /** Stages submitted under job group `group` while `body` runs. */
-  private def stagesOf(group: String)(body: => Unit): Int = {
-    val stages = new java.util.concurrent.atomic.AtomicInteger
+  /** What a body ran under its job group: SQL executions, jobs, stages
+    * and result tasks (the writer's tasks). */
+  private case class Ran(executions: Int, jobs: Int, stages: Int, resultTasks: Int)
+
+  /** `body`'s result and what it ran under job group `group`. */
+  private def ranUnder[A](group: String)(body: => A): (A, Ran) = {
+    val (executions, jobs, stages, resultTasks) = (new AtomicInteger, new AtomicInteger,
+      new AtomicInteger, new AtomicInteger)
+    val groupStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val fenceGroup = s"$group-fence"
     val fence = Promise[Unit]()
     def groupOf(p: java.util.Properties) =
       Option(p).map(_.getProperty("spark.jobGroup.id"))
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+          executions.incrementAndGet()
+        case _ =>
+      }
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (groupOf(e.properties).contains(group)) stages.incrementAndGet()
+        if (groupOf(e.properties).contains(group)) {
+          stages.incrementAndGet(); groupStages.add(e.stageInfo.stageId)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (groupStages.contains(e.stageId) && e.taskType == "ResultTask")
+          resultTasks.incrementAndGet()
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (groupOf(e.properties).contains(fenceGroup)) fence.trySuccess(())
+        if (groupOf(e.properties).contains(group)) jobs.incrementAndGet()
+        else if (groupOf(e.properties).contains(fenceGroup)) fence.trySuccess(())
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, group)
-      body
+      val result = body
       // the listener bus delivers events in order: once a later job's
       // start arrives, every event of `body` has been seen
       sc.setJobGroup(fenceGroup, fenceGroup)
       sc.parallelize(Seq(1), 1).count()
       Await.result(fence.future, 30.seconds)
+      (result, Ran(executions.get, jobs.get, stages.get, resultTasks.get))
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    stages.get
   }
+
+  /** A PK-less `table (id, v)`. */
+  private def loadTarget(table: String): Unit =
+    withConn(_.createStatement().executeUpdate(s"CREATE TABLE $table (id BIGINT, v DOUBLE)"))
+
+  private def plainSpec(table: String, numPartitions: Int) =
+    JdbcSink.Spec(url, table, "", "", numPartitions = numPartitions, truncate = false,
+      relaxDurability = false, rewriteBatchedInserts = false)
 
   test("JdbcSink.write appends batched rows into a real JDBC table") {
     // the same lower-case DataFrame columns land in a target created
@@ -151,19 +178,46 @@ class JdbcIntegrationSpec extends AnyFunSuite with SparkTestBase {
     seedSyncPair("shape_src", "shape_tgt")
     val diffed = DiffSync.diff(readSide("shape_src"), readSide("shape_tgt"),
       Seq("id"))
-    val noop = stagesOf("shape-noop") {
+    val (_, noop) = ranUnder("shape-noop") {
       diffed.write.format("noop").mode("overwrite").save()
     }
-    val apply = stagesOf("shape-apply") {
+    val (_, apply) = ranUnder("shape-apply") {
       DiffSync.applyToJdbc(diffed, Seq("id"),
         DiffSync.SyncTarget(url, "shape_tgt", "", "", dialect = "generic"))
     }
     // two scans feeding the join's exchanges, then the join's result stage
-    assert(noop === 3)
+    assert(noop.stages === 3)
     // an exchange above the join (a repartition before the writer)
-    // would add a stage
-    assert(apply === noop)
+    // would add a stage; a second execution would re-plan the diff
+    assert((apply.executions, apply.stages) === ((1, noop.stages)))
     assert(rowsOf("shape_tgt") === rowsOf("shape_src"))
+  }
+
+  test("JdbcSink.write is one SQL execution running one job") {
+    seed("once_src", (1L to 50L).map(i => (i, i * 2.0)))
+    loadTarget("once_tgt")
+    // a fresh Dataset each: `Dataset.rdd` is computed once per Dataset
+    assert(readSide("once_src").rdd.getNumPartitions === 1)
+    val (tally, ran) = ranUnder("write-once") {
+      JdbcSink.write(readSide("once_src"), plainSpec("once_tgt", 1).copy(truncate = true))
+    }
+    // learning the partition count or going through Dataset.rdd would
+    // add an execution
+    assert((ran.executions, ran.jobs) === ((1, 1)))
+    assert(tally.rows === 50L)
+    assert(rowsOf("once_tgt") === rowsOf("once_src"))
+  }
+
+  test("-po shapes the written partitions: coalesce down, repartition up") {
+    for ((table, rows, in, out) <- Seq(("po_down", 100L, 4, 2), ("po_up", 60L, 1, 3))) {
+      loadTarget(table)
+      def input = spark.range(1, rows + 1, 1, in).select(col("id"), (col("id") * 1.5).as("v"))
+      assert(input.rdd.getNumPartitions === in)
+      val (tally, ran) = ranUnder(s"write-$table")(JdbcSink.write(input, plainSpec(table, out)))
+      assert((ran.executions, ran.jobs, ran.resultTasks) === ((1, 1, out)), table)
+      assert(tally.rows === rows)
+      assert(rowsOf(table) === (1L to rows).map(i => (i, i * 1.5)))
+    }
   }
 
   test("C16: replaying a diff leaves the target where one apply did") {
